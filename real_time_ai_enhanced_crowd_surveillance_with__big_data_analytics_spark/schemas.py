@@ -1,116 +1,13 @@
-"""Typed schemas (SURVEY.md §1.2, FIXTURES.md).
+"""Driver table names (TESTDATA.md, FIXTURES.md).
 
-The reference's data shapes are implicit (85-float YOLO rows, parallel
-Python lists, SQLite DDL — reference main.py:98-100, db.sqlite3); here
-every relation gets an explicit StructType so plans analyze without
-inference and nested fields stay shallow enough for Catalyst pruning.
+Table schemas are not declared here: ``sources.tables.load_table``
+reads the schema Spark infers from each parquet file (memoized per
+file identity), so the physical types — TIMESTAMP_NTZ ``events.ts``,
+``list<float>`` embeddings — are whatever the files hold, and a
+renamed column fails analysis instead of reading as nulls.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import types as T
-
-# --- surveillance domain (reference-derived) -------------------------------
-
-# Frame-stream metadata (reference webcam loop, main.py:143-149). The
-# reference has no timestamps/keys; frame_ts/camera_id are our additions so
-# event-time windows and keyed state become possible. At 100 TB the image
-# payload is a URI pointer, never an inline blob.
-FRAMES = T.StructType(
-    [
-        T.StructField("camera_id", T.StringType(), False),
-        T.StructField("frame_id", T.LongType(), False),
-        T.StructField("frame_ts", T.TimestampType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("image_uri", T.StringType(), True),
-        T.StructField("image", T.BinaryType(), True),
-    ]
-)
-
-# One row per candidate detection, post-parse pre-NMS (reference
-# main.py:105-122: boxes/confidences/class_ids parallel lists).
-DETECTIONS_RAW = T.StructType(
-    [
-        T.StructField("camera_id", T.StringType(), False),
-        T.StructField("frame_id", T.LongType(), False),
-        T.StructField("frame_ts", T.TimestampType(), True),
-        T.StructField("class_id", T.IntegerType(), True),
-        T.StructField("label", T.StringType(), True),
-        T.StructField("confidence", T.DoubleType(), True),
-        T.StructField("x", T.IntegerType(), True),
-        T.StructField("y", T.IntegerType(), True),
-        T.StructField("w", T.IntegerType(), True),
-        T.StructField("h", T.IntegerType(), True),
-    ]
-)
-
-# Class-name dimension (reference coco.names via main.py:47-48); tiny →
-# always broadcast on join.
-CLASS_NAMES = T.StructType(
-    [
-        T.StructField("class_id", T.IntegerType(), False),
-        T.StructField("label", T.StringType(), False),
-    ]
-)
-
-# auth_user mirror (reference db.sqlite3 DDL; verify.py validators).
-USERS = T.StructType(
-    [
-        T.StructField("id", T.LongType(), False),
-        T.StructField("username", T.StringType(), True),
-        T.StructField("password", T.StringType(), True),
-        T.StructField("first_name", T.StringType(), True),
-        T.StructField("last_name", T.StringType(), True),
-        T.StructField("email", T.StringType(), True),
-        T.StructField("contact", T.StringType(), True),
-        T.StructField("is_active", T.BooleanType(), True),
-        T.StructField("date_joined", T.TimestampType(), True),
-        T.StructField("last_login", T.TimestampType(), True),
-    ]
-)
-
-# Alert sink rows (reference alarm edge-trigger, main.py:12-23,180-185).
-ALERTS = T.StructType(
-    [
-        T.StructField("camera_id", T.StringType(), False),
-        T.StructField("alert_type", T.StringType(), False),
-        T.StructField("episode_id", T.LongType(), True),
-        T.StructField("start_ts", T.TimestampType(), True),
-        T.StructField("frame_id", T.LongType(), True),
-    ]
-)
-
-# --- driver testdata (TESTDATA.md) -----------------------------------------
-
-EVENTS = T.StructType(
-    [
-        T.StructField("event_id", T.LongType(), True),
-        T.StructField("ts", T.TimestampType(), True),
-        T.StructField("user_id", T.LongType(), True),
-        T.StructField("event_type", T.StringType(), True),
-        T.StructField("value", T.DoubleType(), True),
-        T.StructField("props", T.StringType(), True),
-    ]
-)
-
-DOCUMENTS = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
-        T.StructField("source", T.StringType(), True),
-        T.StructField("n_chars", T.LongType(), True),
-    ]
-)
-
-EMBEDDINGS = T.StructType(
-    [
-        T.StructField("vec_id", T.LongType(), True),
-        T.StructField("embedding", T.ArrayType(T.DoubleType()), True),
-        T.StructField("label", T.IntegerType(), True),
-    ]
-)
 
 TPCH_TABLES = (
     "region",

@@ -3,6 +3,9 @@
 Plain ``spark.read.parquet`` so Catalyst gets pushdown/pruning for free
 (reference equivalents: webcam scan main.py:143, coco.names scan
 main.py:47-48, SQLite scan settings.py:78-83 — see SURVEY.md §2.1).
+The schema Spark infers from the parquet footers is memoized per file
+identity (``read_parquet``), so only the first read of a file pays the
+inference job; the physical types stay whatever the files hold.
 
 At 100 TB these tables would be date/camera-partitioned parquet (or
 Iceberg); the reader API is identical, partition pruning comes from the
@@ -12,13 +15,30 @@ filter expressions already in the queries.
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..schemas import TPCH_TABLES
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
+
+# session confs that change the schema Spark infers from a parquet
+# footer (nanos → long, NTZ vs LTZ, binary → string, INT96 → timestamp)
+# or from several footers (merge); part of every memo stamp
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# path -> (stamp, inferred schema); one entry per path, replaced when
+# the file identity or an inference conf changes
+_SCHEMAS: dict[str, tuple[tuple, T.StructType]] = {}
 
 
 def sf_dir() -> str:
@@ -27,6 +47,9 @@ def sf_dir() -> str:
 
 def load_table(spark: SparkSession, name: str, sf_path: str | None = None) -> DataFrame:
     """Read one driver table; column pruning + predicate pushdown apply.
+    The schema is the one Spark infers from the file, memoized per file
+    identity (``read_parquet``): only the first read of an unchanged
+    file launches a Spark job.
 
     ``events.ts`` arrives in one of three physical shapes depending on
     how the driver generated the parquet:
@@ -45,9 +68,48 @@ def load_table(spark: SparkSession, name: str, sf_path: str | None = None) -> Da
     """
     base = sf_path or sf_dir()
     _ensure_session_conf(spark)
-    df = spark.read.parquet(f"{base}/{name}.parquet")
+    df = read_parquet(spark, f"{base}/{name}.parquet")
     if name == "events":
         df = normalize_events_ts(df)
+    return df
+
+
+def file_identity(path: str) -> tuple | None:
+    """``(path, st_mtime_ns, st_size)`` of a local file; for a directory
+    (a Spark-written dataset) the path plus that triple for every file
+    under it, so a rewritten, added or removed part file changes it.
+    None when ``os.stat`` cannot see the path (a remote URI)."""
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return (path, st.st_mtime_ns, st.st_size)
+        files = []
+        for root, dirs, names in os.walk(path):
+            dirs.sort()
+            for n in sorted(names):
+                f = os.path.join(root, n)
+                fst = os.stat(f)
+                files.append((os.path.relpath(f, path), fst.st_mtime_ns, fst.st_size))
+        return (path, tuple(files))
+    except (OSError, ValueError):
+        return None
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with schema inference (one Spark job
+    reading the footers) run once per file identity and inference
+    confs; later reads pass the memoized schema, which launches no job
+    and yields the same DataFrame schema. A path ``file_identity``
+    cannot see reads uncached."""
+    ident = file_identity(path)
+    if ident is None:
+        return spark.read.parquet(path)
+    stamp = (ident, tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS))
+    hit = _SCHEMAS.get(path)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[path] = (stamp, df.schema)
     return df
 
 

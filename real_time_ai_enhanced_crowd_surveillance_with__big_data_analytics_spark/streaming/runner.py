@@ -23,15 +23,22 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.tables import _ensure_session_conf, normalize_events_ts
+from ..sources.tables import (
+    _ensure_session_conf,
+    file_identity,
+    normalize_events_ts,
+    read_parquet,
+)
 
 # one replay directory per (session-lifetime, source file identity):
 # the chunking write runs once, every stream_events call after that
 # just points the file source at it. Keyed on the source parquet's
-# (path, mtime, size) so a regenerated events.parquet within one
-# session re-derives the replay instead of streaming stale chunks;
-# the mkdtemp dirs are removed at interpreter exit.
-_REPLAY_DIRS: dict[tuple[str, float, int], str] = {}
+# ``file_identity`` (the rule the batch schema memo uses) so a
+# regenerated events.parquet within one session re-derives the replay
+# instead of streaming stale chunks; a source os.stat cannot see is
+# re-derived on every call. The mkdtemp dirs are removed at
+# interpreter exit.
+_REPLAY_DIRS: dict[tuple, str] = {}
 _REPLAY_CHUNKS = 8
 
 
@@ -42,12 +49,6 @@ def _cleanup_replay_dirs() -> None:
 
 
 atexit.register(_cleanup_replay_dirs)
-
-
-def _source_key(sf_path: str) -> tuple[str, float, int]:
-    src = f"{sf_path}/events.parquet"
-    st = os.stat(src)
-    return (src, st.st_mtime, st.st_size)
 
 
 def _replay_dir(spark: SparkSession, sf_path: str) -> str:
@@ -61,11 +62,12 @@ def _replay_dir(spark: SparkSession, sf_path: str) -> str:
     Result: micro-batches arrive in event_id order, which is what the
     stateful operators' incremental correctness is measured against.
     """
-    key = _source_key(sf_path)
+    src = f"{sf_path}/events.parquet"
+    key = file_identity(src)
     base = _REPLAY_DIRS.get(key)
     if base is not None and os.path.isdir(base):
         return base
-    events = spark.read.parquet(f"{sf_path}/events.parquet")
+    events = read_parquet(spark, src)
     base = tempfile.mkdtemp(prefix="events_replay_")
     (
         events.repartitionByRange(_REPLAY_CHUNKS, "event_id")
@@ -76,7 +78,8 @@ def _replay_dir(spark: SparkSession, sf_path: str) -> str:
     t0 = 1_000_000_000  # fixed epoch base: deterministic replay order
     for i, path in enumerate(sorted(glob.glob(f"{base}/part-*"))):
         os.utime(path, (t0 + i, t0 + i))
-    _REPLAY_DIRS[key] = base
+    if key is not None:
+        _REPLAY_DIRS[key] = base
     return base
 
 
@@ -92,11 +95,13 @@ def stream_events(spark: SparkSession, sf_path: str) -> DataFrame:
     The file-source schema comes from the replay files' parquet footer
     (streaming sources can't infer), so the physical ts shape
     (nanos-long / NTZ / LTZ — see ``sources.tables.load_table``) is
-    handled identically to batch.
+    handled identically to batch. It is inferred through the same
+    per-file-identity memo as batch reads, so a repeated call on an
+    unchanged source launches no inference job.
     """
     _ensure_session_conf(spark)
     base = _replay_dir(spark, sf_path)
-    raw_schema = spark.read.parquet(base).schema
+    raw_schema = read_parquet(spark, base).schema
     raw = (
         spark.readStream.schema(raw_schema)
         .option("maxFilesPerTrigger", 1)

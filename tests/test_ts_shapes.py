@@ -12,6 +12,7 @@ values, so the next regeneration can't reintroduce the breakage.
 from __future__ import annotations
 
 import datetime as dt
+import math
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -54,14 +55,16 @@ def _write(tmp_path, ts_type) -> str:
     ids=["ntz_us", "nanos", "ltz_us"],
 )
 def test_load_table_normalizes_all_ts_shapes(spark, tmp_path, ts_type):
-    sf = _write(tmp_path, ts_type)
-    df = load_table(spark, "events", sf)
+    assert_normalized(load_table(spark, "events", _write(tmp_path, ts_type)))
+
+
+def assert_normalized(df) -> None:
+    """``df`` is the events table read back from ``_write``: session-local
+    TIMESTAMP holding exactly ``ROWS``' instants."""
     assert dict(df.dtypes)["ts"] == "timestamp"
     got = [r.ts for r in df.orderBy("event_id").collect()]
     assert got == [r[1] for r in ROWS]
     # epoch arithmetic — the exact call path that broke in round 2
-    import math
-
     secs = sorted(
         r.epoch for r in df.selectExpr("cast(ts as long) as epoch").collect()
     )
