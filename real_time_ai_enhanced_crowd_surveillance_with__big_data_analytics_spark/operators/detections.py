@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 N_CLASSES = 10  # stand-in for COCO-80; class 0 = 'person' by convention
 CONFIDENCE_THRESHOLD = 0.5  # reference main.py:103,201
+CROWD_THRESHOLD = 3  # more persons than this = crowded, reference main.py:232
 FRAME_W = 416  # reference blob geometry main.py:93
 FRAME_H = 416
 

@@ -12,27 +12,25 @@ argument as operators/historical.py's time-partitioned store, applied
 to vector search — at 100 TB this is the difference between an ANN
 query costing a full-corpus scan and costing a bounded probe read.
 
-Cell assignment = nearest centroid (cosine, round-6, label-asc ties —
-identical arithmetic to plans/similarity.py::nearest_centroid, so the
-persisted assignment matches the in-flight one)."""
+Cell assignment and probe selection are plans/similarity.py's own
+kernels (_centroid_matrix, _cosine_assign, _probe_cells, _cosine:
+round-6 cosine, label-asc ties), so the persisted assignment is the
+in-flight nearest_centroid one by construction. A zero vector's cosine
+is 0/0 = NaN, emitted as null, as in the registry queries and their
+DuckDB oracles."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def _centroids(emb: DataFrame) -> tuple:
-    """label → mean vector, as numpy (labels asc, matrix row-aligned) —
-    delegates to plans/similarity.py::_centroid_matrix so the persisted
-    index's cell arithmetic is THE SAME CODE as nearest_centroid /
-    ivf_knn's in-flight assignment (not a parallel copy that can
-    drift). Rejects an empty corpus with a clear error."""
-    if emb.limit(1).count() == 0:
-        raise ValueError("cannot build an IVF index from an empty corpus")
-    from ..plans.similarity import _centroid_matrix
-
-    return _centroid_matrix(emb)
+from ..plans.similarity import (
+    _centroid_matrix,
+    _cosine,
+    _cosine_assign,
+    _probe_cells,
+    _vectors,
+)
 
 
 def build_ivf_index(emb: DataFrame, index_dir: str) -> None:
@@ -42,29 +40,23 @@ def build_ivf_index(emb: DataFrame, index_dir: str) -> None:
     import numpy as np
     import pandas as pd
 
-    labs, cmat = _centroids(emb)
-    cnorm = np.linalg.norm(cmat, axis=1)
-    cnorm[cnorm == 0.0] = 1.0
+    labs, cmat = _centroid_matrix(emb)
+    if not len(labs):
+        raise ValueError("cannot build an IVF index from an empty corpus")
     spark = emb.sparkSession
+    cnorm = np.linalg.norm(cmat, axis=1)
     bc = spark.sparkContext.broadcast((labs, cmat, cnorm))
 
     def assign(batches):
-        labs_b, cm, cn = bc.value
         for pdf in batches:
-            x = np.asarray(pdf["embedding"].tolist(), dtype="float64")
-            if x.size == 0:
+            if pdf.empty:
                 continue
-            xn = np.linalg.norm(x, axis=1)
-            xn[xn == 0.0] = 1.0
-            sims = np.round(x @ cm.T / (xn[:, None] * cn[None, :]), 6)
-            # ties: smallest label wins (argmax returns first maximum,
-            # labels are sorted ascending) — nearest_centroid semantics
-            cell = labs_b[sims.argmax(axis=1)]
+            labs_b, best, _ = _cosine_assign(bc, pdf)
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"].to_numpy(),
                     "embedding": pdf["embedding"],
-                    "cell": cell,
+                    "cell": labs_b[best],
                 }
             )
 
@@ -102,33 +94,25 @@ def ivf_probe_query(
     import pandas as pd
 
     q = np.asarray(qvec, dtype="float64")
-    qn = float(np.linalg.norm(q)) or 1.0
     cent = spark.read.parquet(f"{index_dir}/centroids").collect()
     cent.sort(key=lambda r: r["label"])
     labs = np.asarray([r["label"] for r in cent], dtype="int64")
     cmat = np.asarray([list(r["centroid"]) for r in cent], dtype="float64")
-    cn = np.linalg.norm(cmat, axis=1)
-    cn[cn == 0.0] = 1.0
-    csim = np.round(cmat @ q / (cn * qn), 6)
-    order = np.lexsort((labs, -csim))
-    probes = [int(v) for v in labs[order[:nprobe]]]
+    probes = [int(v) for v in _probe_cells(labs, cmat, q, nprobe)]
 
     vecs = spark.read.parquet(f"{index_dir}/vectors").filter(
         F.col("cell").isin(probes)
     )
     if exclude_vec_id is not None:
         vecs = vecs.filter(F.col("vec_id") != exclude_vec_id)
-    bc = spark.sparkContext.broadcast((q, qn))
+    bc = spark.sparkContext.broadcast((q, np.linalg.norm(q)))
 
     def score(batches):
         qv, qnb = bc.value
         for pdf in batches:
-            x = np.asarray(pdf["embedding"].tolist(), dtype="float64")
-            if x.size == 0:
+            if pdf.empty:
                 continue
-            xn = np.linalg.norm(x, axis=1)
-            xn[xn == 0.0] = 1.0
-            cos = np.round(x @ qv / (xn * qnb), 6)
+            cos = _cosine(_vectors(pdf), qv, qnb)
             yield pd.DataFrame(
                 {"vec_id": pdf["vec_id"].to_numpy(), "cosine": cos}
             )

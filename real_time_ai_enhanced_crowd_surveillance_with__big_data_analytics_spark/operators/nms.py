@@ -37,6 +37,18 @@ def _iou(box: np.ndarray, kept: np.ndarray) -> np.ndarray:
     return np.where(union > 0, inter / union, 0.0)
 
 
+def _greedy_keep(boxes: np.ndarray, iou_threshold: float) -> list[int]:
+    """The greedy walk over boxes already in confidence-descending
+    order: indices of the boxes kept, each one's IoU with every
+    earlier kept box being <= the threshold."""
+    kept: list[int] = []
+    for i in range(len(boxes)):
+        if kept and np.any(_iou(boxes[i], boxes[kept]) > iou_threshold):
+            continue
+        kept.append(i)
+    return kept
+
+
 def nms_pandas(pdf: pd.DataFrame, iou_threshold: float) -> pd.DataFrame:
     """Greedy NMS on one frame's detections; returns kept rows only.
 
@@ -47,12 +59,7 @@ def nms_pandas(pdf: pd.DataFrame, iou_threshold: float) -> pd.DataFrame:
         return pdf
     order = np.argsort(-pdf["confidence"].to_numpy(), kind="stable")
     boxes = pdf[["x", "y", "w", "h"]].to_numpy(dtype="float64")[order]
-    keep_local: list[int] = []
-    for i in range(len(order)):
-        if keep_local and np.any(_iou(boxes[i], boxes[keep_local]) > iou_threshold):
-            continue
-        keep_local.append(i)
-    return pdf.iloc[order[keep_local]]
+    return pdf.iloc[order[_greedy_keep(boxes, iou_threshold)]]
 
 
 def _nms_pairs(
@@ -111,13 +118,7 @@ def _nms_multi(
     out: list[np.ndarray] = []
     for s, e in zip(starts, ends):
         order = np.argsort(-conf[s:e], kind="stable")
-        b = boxes[s:e][order]
-        kept: list[int] = []
-        for i in range(len(order)):
-            if kept and np.any(_iou(b[i], b[kept]) > iou_threshold):
-                continue
-            kept.append(i)
-        out.append(s + order[kept])
+        out.append(s + order[_greedy_keep(boxes[s:e][order], iou_threshold)])
     return multi.iloc[np.concatenate(out)]
 
 

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from ..functions.text import quality_score, tokens
 from ..plans.training_data import HASH_P
 
-try:  # pragma: no cover - import guard mirrors similarity_mllib
+try:  # pragma: no cover - pyspark.ml is optional
     from pyspark.ml import Pipeline, PipelineModel
     from pyspark.ml.classification import LogisticRegression
     from pyspark.ml.feature import IDF, HashingTF

@@ -17,14 +17,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.detections import CROWD_THRESHOLD
 from ..operators.edge_trigger import rising_edges
 from ..operators.topk import topk_per_group
 from ..sources.tables import load_table
 
 # Reference operating points (BASELINE.md): confidence>0.5 scaled onto the
-# events.value domain; crowd threshold >3 (main.py:232).
+# events.value domain; the crowd threshold (>3, main.py:232) is
+# operators/detections.py's CROWD_THRESHOLD.
 VALUE_THRESHOLD = 100.0
-CROWD_THRESHOLD = 3
 ALARM_THRESHOLD = 150.0
 
 

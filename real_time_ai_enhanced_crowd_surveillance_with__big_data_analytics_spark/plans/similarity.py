@@ -40,6 +40,61 @@ def _duck_cosine(a: str, b: str) -> str:
     )
 
 
+# --- broadcast-probe scoring kernel ------------------------------------------
+# Every plan below that scores the corpus against a tiny broadcast side
+# (queries, prompts, hyperplanes, centroids) builds that side with
+# _probe_side and scores each Arrow batch with _cosine, so all of them
+# round exactly like the oracles' ``round(cosine, 6)``.
+
+def _probe_side(emb: DataFrame, cond, *extra: str):
+    """The tiny side of a broadcast-probe scoring: rows matching
+    ``cond``, sorted by vec_id, as (rows, vec_ids, float64 matrix, row
+    norms). ``extra`` columns ride along on ``rows``."""
+    import numpy as np
+
+    rows = emb.filter(cond).select("vec_id", *extra, "embedding").collect()
+    rows.sort(key=lambda r: r.vec_id)
+    ids = np.asarray([r.vec_id for r in rows], dtype="int64")
+    mat = np.asarray([list(r.embedding) for r in rows], dtype="float64")
+    return rows, ids, mat, np.linalg.norm(mat, axis=1)
+
+
+def _vectors(pdf):
+    """An Arrow batch's ``embedding`` column as a float64 matrix."""
+    import numpy as np
+
+    return np.asarray(pdf["embedding"].tolist(), dtype="float64")
+
+
+def _cosine(a, q, qn, scale: float = 1.0):
+    """Round-6 cosine of every row of ``a`` against ``q``, a probe
+    matrix (one gemm → rows × probes) or one probe vector (gemv →
+    rows), with ``qn`` its norm(s). ``scale`` multiplies the dot
+    products before the division (fall detection's ×100 logits; 1.0
+    is exact). A zero row or probe gives 0/0 = NaN, which mapInPandas
+    emits as null — what the DuckDB oracles return for it."""
+    import numpy as np
+
+    an = np.linalg.norm(a, axis=1)
+    return np.round(scale * (a @ q.T) / np.multiply.outer(an, qn), 6)
+
+
+def _partial_topk(ids, sims, qids, k: int):
+    """A batch's local top-k per probe column of ``sims`` (cosine
+    DESC, vec_id ASC) as flat (qid, vec_id, cosine) arrays. The global
+    top-k is a subset of the union of these, so only ≤ batches ×
+    probes × k rows reach the rank shuffle."""
+    import numpy as np
+
+    out_q, out_v, out_c = [], [], []
+    for j in range(len(qids)):
+        top = np.lexsort((ids, -sims[:, j]))[:k]
+        out_q.append(np.full(len(top), qids[j]))
+        out_v.append(ids[top])
+        out_c.append(sims[top, j])
+    return np.concatenate(out_q), np.concatenate(out_v), np.concatenate(out_c)
+
+
 # --- brute-force cosine top-k (baseline ANN; reference main.py:79-81) -------
 
 def knn_bruteforce(spark: SparkSession, sf: str) -> DataFrame:
@@ -97,41 +152,21 @@ def knn_batch(spark: SparkSession, sf: str) -> DataFrame:
     query (global top-k ⊆ union of per-partition top-k), so the final
     rank shuffle sees ≤ partitions × queries × k candidate rows — at
     100 TB the full 8N scored fan-out never moves."""
-    import numpy as np
     import pandas as pd
 
     emb = load_table(spark, "embeddings", sf)
-    qrows = (
-        emb.filter(F.col("vec_id") < KNN_BATCH_QUERIES)
-        .select("vec_id", "embedding")
-        .collect()
+    _, qids, qmat, qnorm = _probe_side(
+        emb, F.col("vec_id") < KNN_BATCH_QUERIES
     )
-    qrows.sort(key=lambda r: r.vec_id)
-    qids = np.asarray([r.vec_id for r in qrows], dtype="int64")
-    qmat = np.asarray([list(r.embedding) for r in qrows], dtype="float64")
-    qnorm = np.linalg.norm(qmat, axis=1)
     bc = spark.sparkContext.broadcast((qids, qmat, qnorm))
 
     def partial_topk(batches):
         qi, qm, qn = bc.value
         for pdf in batches:
-            a = np.asarray(pdf["embedding"].tolist(), dtype="float64")
-            an = np.linalg.norm(a, axis=1)
-            sims = np.round(a @ qm.T / (an[:, None] * qn[None, :]), 6)
+            sims = _cosine(_vectors(pdf), qm, qn)
             ids = pdf["vec_id"].to_numpy()
-            out_q, out_v, out_c = [], [], []
-            for j in range(len(qi)):
-                top = np.lexsort((ids, -sims[:, j]))[:KNN_BATCH_K]
-                out_q.append(np.full(len(top), qi[j]))
-                out_v.append(ids[top])
-                out_c.append(sims[top, j])
-            yield pd.DataFrame(
-                {
-                    "qid": np.concatenate(out_q),
-                    "vec_id": np.concatenate(out_v),
-                    "cosine": np.concatenate(out_c),
-                }
-            )
+            q, v, c = _partial_topk(ids, sims, qi, KNN_BATCH_K)
+            yield pd.DataFrame({"qid": q, "vec_id": v, "cosine": c})
 
     partial = (
         emb.filter(F.col("vec_id") >= KNN_BATCH_QUERIES)
@@ -222,24 +257,16 @@ def knn_shapley(spark: SparkSession, sf: str) -> DataFrame:
     import pandas as pd
 
     emb = load_table(spark, "embeddings", sf)
-    qrows = (
-        emb.filter(F.col("vec_id") < KNN_BATCH_QUERIES)
-        .select("vec_id", "label", "embedding")
-        .collect()
+    qrows, qids, qmat, qnorm = _probe_side(
+        emb, F.col("vec_id") < KNN_BATCH_QUERIES, "label"
     )
-    qrows.sort(key=lambda r: r.vec_id)
-    qids = np.asarray([r.vec_id for r in qrows], dtype="int64")
     qlabs = np.asarray([r.label for r in qrows], dtype="int64")
-    qmat = np.asarray([list(r.embedding) for r in qrows], dtype="float64")
-    qnorm = np.linalg.norm(qmat, axis=1)
     bc = spark.sparkContext.broadcast((qids, qlabs, qmat, qnorm))
 
     def fanout(batches):
         qi, ql, qm, qn = bc.value
         for pdf in batches:
-            a = np.asarray(pdf["embedding"].tolist(), dtype="float64")
-            an = np.linalg.norm(a, axis=1)
-            sims = np.round(a @ qm.T / (an[:, None] * qn[None, :]), 6)
+            sims = _cosine(_vectors(pdf), qm, qn)
             ids = pdf["vec_id"].to_numpy()
             labs = pdf["label"].to_numpy()
             n, q = sims.shape
@@ -355,22 +382,13 @@ def fall_detection_softmax(spark: SparkSession, sf: str) -> DataFrame:
     import pandas as pd
 
     emb = load_table(spark, "embeddings", sf)
-    prows = (
-        emb.filter(F.col("vec_id") <= 2)
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    prows.sort(key=lambda r: r.vec_id)
-    pmat = np.asarray([list(r.embedding) for r in prows], dtype="float64")
-    pnorm = np.linalg.norm(pmat, axis=1)
+    _, _, pmat, pnorm = _probe_side(emb, F.col("vec_id") <= 2)
     bc = spark.sparkContext.broadcast((pmat, pnorm))
 
     def infer(batches):
         pm, pn = bc.value
         for pdf in batches:
-            a = np.asarray(pdf["embedding"].tolist(), dtype="float64")
-            an = np.linalg.norm(a, axis=1)
-            sims = np.round(100.0 * (a @ pm.T) / (an[:, None] * pn[None, :]), 6)
+            sims = _cosine(_vectors(pdf), pm, pn, scale=100.0)
             m = sims.max(axis=1, keepdims=True)
             exps = np.exp(sims - m)
             probs = exps / exps.sum(axis=1, keepdims=True)
@@ -516,17 +534,14 @@ def nearest_centroid(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _cosine_assign(bc, pdf):
-    """Shared assignment kernel for nearest_centroid / kmeans_refine:
+    """Shared assignment kernel for nearest_centroid / kmeans_refine /
+    operators/ivf_index.py::build_ivf_index:
     round-6 cosine against the broadcast (labels, centroids, norms),
     argmax taking the FIRST maximum so ties break toward the smallest
     label — the rule both oracles' ``csim DESC, clabel ASC`` rank
     encodes. Returns (labels_array, best_idx, sims)."""
-    import numpy as np
-
     labs_b, cm, cn = bc.value
-    a = np.asarray(pdf["embedding"].tolist(), dtype="float64")
-    an = np.linalg.norm(a, axis=1)
-    sims = np.round(a @ cm.T / (an[:, None] * cn[None, :]), 6)
+    sims = _cosine(_vectors(pdf), cm, cn)
     return labs_b, sims.argmax(axis=1), sims
 
 
@@ -565,6 +580,38 @@ NEARDUP_THRESHOLD = 0.4
 NEARDUP_TILE_ROWS = 1024
 
 
+def _tiled_pairs(emb: DataFrame, tile_scan) -> DataFrame:
+    """Union over vec_id-range tiles of ≤NEARDUP_TILE_ROWS vectors of
+    one full-corpus ``emb.mapInPandas(tile_scan(ids, mat))`` each →
+    (ia, ib, cosine). Each tile alone reaches the driver (the vec_id
+    range filter reaches the parquet scan: row-group pruning on the
+    tile's min/max at scale), as its vec_ids and float64 matrix; the
+    union covers each (ia < ib) pair once because ib lives in exactly
+    one tile."""
+    lo, hi = emb.agg(F.min("vec_id"), F.max("vec_id")).first()
+    if lo is None:
+        raise ValueError("empty embeddings table")
+    n_tiles = max(1, -(-(hi - lo + 1) // NEARDUP_TILE_ROWS))
+    out = None
+    for t in range(n_tiles):
+        tlo = lo + t * NEARDUP_TILE_ROWS
+        thi = tlo + NEARDUP_TILE_ROWS
+        tile = (
+            emb.filter((F.col("vec_id") >= tlo) & (F.col("vec_id") < thi))
+            .select("vec_id", "embedding")
+            .toPandas()
+        )
+        if not len(tile):
+            continue
+        part = emb.mapInPandas(
+            tile_scan(tile["vec_id"].to_numpy(), _vectors(tile)),
+            schema="ia long, ib long, cosine double",
+        )
+        out = part if out is None else out.unionAll(part)
+    assert out is not None  # unreachable: n_tiles >= 1 and lo checked
+    return out
+
+
 def embedding_neardup_exact(spark: SparkSession, sf: str) -> DataFrame:
     """All vector pairs with cosine ≥ threshold — the exact answer for
     near-duplicate detection, as a TILED blocked matrix product.
@@ -591,32 +638,15 @@ def embedding_neardup_exact(spark: SparkSession, sf: str) -> DataFrame:
     import pandas as pd
 
     emb = load_table(spark, "embeddings", sf)
-    lo, hi = emb.agg(F.min("vec_id"), F.max("vec_id")).first()
-    if lo is None:
-        raise ValueError("empty embeddings table")
-    n_tiles = max(1, -(-(hi - lo + 1) // NEARDUP_TILE_ROWS))
-    out = None
-    for t in range(n_tiles):
-        tlo = lo + t * NEARDUP_TILE_ROWS
-        thi = tlo + NEARDUP_TILE_ROWS
-        # vec_id-range filter reaches the parquet scan (row-group
-        # pruning on the tile's min/max at scale)
-        tile = (
-            emb.filter((F.col("vec_id") >= tlo) & (F.col("vec_id") < thi))
-            .select("vec_id", "embedding")
-            .toPandas()
-        )
-        if not len(tile):
-            continue
-        ids = tile["vec_id"].to_numpy()
-        mat = np.asarray(tile["embedding"].tolist(), dtype="float64")
+
+    def tile_scan(ids, mat):
         mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
         bc = spark.sparkContext.broadcast((ids, mat))
 
-        def block(batches, _bc=bc):
-            ids_b, m_b = _bc.value
+        def block(batches):
+            ids_b, m_b = bc.value
             for pdf in batches:
-                a = np.asarray(pdf["embedding"].tolist(), dtype="float64")
+                a = _vectors(pdf)
                 a = a / np.linalg.norm(a, axis=1, keepdims=True)
                 sims = np.round(a @ m_b.T, 6)
                 ia = pdf["vec_id"].to_numpy()
@@ -629,10 +659,9 @@ def embedding_neardup_exact(spark: SparkSession, sf: str) -> DataFrame:
                     {"ia": ia[r], "ib": ids_b[c], "cosine": sims[r, c]}
                 )
 
-        part = emb.mapInPandas(block, schema="ia long, ib long, cosine double")
-        out = part if out is None else out.unionAll(part)
-    assert out is not None  # unreachable: n_tiles >= 1 and lo checked
-    return out
+        return block
+
+    return _tiled_pairs(emb, tile_scan)
 
 
 NEARDUP_EXACT_SQL = f"""
@@ -671,7 +700,7 @@ def _corpus_rotation(emb: DataFrame):
 
     def partial(batches):
         for pdf in batches:
-            a = np.asarray(pdf["embedding"].tolist(), dtype="float64")
+            a = _vectors(pdf)
             a = a / np.linalg.norm(a, axis=1, keepdims=True)
             yield pd.DataFrame({"g": [(a.T @ a).reshape(-1).tolist()]})
 
@@ -737,33 +766,18 @@ def embedding_neardup_blocked(spark: SparkSession, sf: str) -> DataFrame:
     rot = _corpus_rotation(emb)
     k = min(NEARDUP_HEAD_DIMS, rot.shape[1] - 1)
     bc_rot = spark.sparkContext.broadcast((rot, k))
-    lo, hi = emb.agg(F.min("vec_id"), F.max("vec_id")).first()
-    if lo is None:
-        raise ValueError("empty embeddings table")
-    n_tiles = max(1, -(-(hi - lo + 1) // NEARDUP_TILE_ROWS))
-    out = None
-    for t in range(n_tiles):
-        tlo = lo + t * NEARDUP_TILE_ROWS
-        thi = tlo + NEARDUP_TILE_ROWS
-        tile = (
-            emb.filter((F.col("vec_id") >= tlo) & (F.col("vec_id") < thi))
-            .select("vec_id", "embedding")
-            .toPandas()
-        )
-        if not len(tile):
-            continue
-        ids = tile["vec_id"].to_numpy()
-        mat = np.asarray(tile["embedding"].tolist(), dtype="float64")
+
+    def tile_scan(ids, mat):
         mat = (mat / np.linalg.norm(mat, axis=1, keepdims=True)) @ rot
         ht, tt = mat[:, :k], mat[:, k:]
         tnorm_t = np.sqrt(np.clip(1.0 - (ht**2).sum(axis=1), 0.0, None))
         bc = spark.sparkContext.broadcast((ids, ht, tt, tnorm_t))
 
-        def block(batches, _bc=bc, _rot=bc_rot):
-            r_mat, k_ = _rot.value
-            ids_b, ht_b, tt_b, tn_b = _bc.value
+        def block(batches):
+            r_mat, k_ = bc_rot.value
+            ids_b, ht_b, tt_b, tn_b = bc.value
             for pdf in batches:
-                a = np.asarray(pdf["embedding"].tolist(), dtype="float64")
+                a = _vectors(pdf)
                 a = (a / np.linalg.norm(a, axis=1, keepdims=True)) @ r_mat
                 hp, tp = a[:, :k_], a[:, k_:]
                 tn_p = np.sqrt(
@@ -808,10 +822,9 @@ def embedding_neardup_blocked(spark: SparkSession, sf: str) -> DataFrame:
                     {"ia": ia_out, "ib": ib_out, "cosine": cos_out}
                 )
 
-        part = emb.mapInPandas(block, schema="ia long, ib long, cosine double")
-        out = part if out is None else out.unionAll(part)
-    assert out is not None  # unreachable: n_tiles >= 1 and lo checked
-    return out
+        return block
+
+    return _tiled_pairs(emb, tile_scan)
 
 
 # --- LSH-banded near-dup pairs (the scale path) ------------------------------
@@ -855,14 +868,7 @@ def _sign_bands(emb: DataFrame, carry_embedding: bool = False) -> DataFrame:
     import pandas as pd
 
     spark = emb.sparkSession
-    hp_rows = (
-        emb.filter(F.col("vec_id") < N_HYPERPLANES)
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    hp_rows.sort(key=lambda r: r.vec_id)
-    hmat = np.asarray([list(r.embedding) for r in hp_rows], dtype="float64")
-    hnorm = np.linalg.norm(hmat, axis=1)
+    _, _, hmat, hnorm = _probe_side(emb, F.col("vec_id") < N_HYPERPLANES)
     bc = spark.sparkContext.broadcast((hmat, hnorm))
     n_bands = N_HYPERPLANES // BAND_SIZE
     weights = (2.0 ** np.arange(BAND_SIZE)).astype("int64")
@@ -870,12 +876,10 @@ def _sign_bands(emb: DataFrame, carry_embedding: bool = False) -> DataFrame:
     def bands(batches):
         hm, hn = bc.value
         for pdf in batches:
-            a = np.asarray(pdf["embedding"].tolist(), dtype="float64")
-            an = np.linalg.norm(a, axis=1)
             # bit = round(cosine, 6) >= 0 — matches the oracle's rounded
             # cosine compare bit-for-bit (sign(dot) alone could disagree
             # inside the round-off window)
-            cosm = np.round((a @ hm.T) / (an[:, None] * hn[None, :]), 6)
+            cosm = _cosine(_vectors(pdf), hm, hn)
             bits = (cosm >= 0).astype("int64")
             keys = bits.reshape(-1, n_bands, BAND_SIZE) @ weights
             ids = pdf["vec_id"].to_numpy()
@@ -945,7 +949,7 @@ def embedding_neardup_lsh(spark: SparkSession, sf: str) -> DataFrame:
         ids = pdf["vec_id"].to_numpy()
         order = np.argsort(ids)
         ids = ids[order]
-        m = np.asarray(pdf["embedding"].tolist(), dtype="float64")[order]
+        m = _vectors(pdf)[order]
         n = np.linalg.norm(m, axis=1)
         nm = len(ids)
         # tile the row side: peak sim-block memory ≈ tile × nm × 8 B
@@ -1088,22 +1092,19 @@ def ivf_knn(spark: SparkSession, sf: str) -> DataFrame:
         ),
         dtype="float64",
     )
-    qn = np.linalg.norm(qvec)
-    qsims = np.round(cmat @ qvec / (cnorm * qn), 6)
-    order = np.lexsort((labs, -qsims))  # csim desc, then label asc
-    probe = labs[order[:IVF_NPROBE]]
-    bc = spark.sparkContext.broadcast((labs, cmat, cnorm, qvec, qn, probe))
+    probe = _probe_cells(labs, cmat, qvec, IVF_NPROBE)
+    bc = spark.sparkContext.broadcast(
+        (labs, cmat, cnorm, qvec, np.linalg.norm(qvec), probe)
+    )
 
     def scan(batches):
         labs_b, cm, cn, qv, qnb, probe_b = bc.value
         for pdf in batches:
-            a = np.asarray(pdf["embedding"].tolist(), dtype="float64")
-            an = np.linalg.norm(a, axis=1)
-            sims = np.round(a @ cm.T / (an[:, None] * cn[None, :]), 6)
-            cell = labs_b[sims.argmax(axis=1)]
+            a = _vectors(pdf)
+            cell = labs_b[_cosine(a, cm, cn).argmax(axis=1)]
             ids = pdf["vec_id"].to_numpy()
             mask = np.isin(cell, probe_b) & (ids != 0)
-            cos = np.round(a[mask] @ qv / (an[mask] * qnb), 6)
+            cos = _cosine(a[mask], qv, qnb)
             yield pd.DataFrame(
                 {
                     "vec_id": ids[mask],
@@ -1116,6 +1117,16 @@ def ivf_knn(spark: SparkSession, sf: str) -> DataFrame:
         scan, schema="vec_id long, label int, cosine double"
     )
     return scanned.orderBy(F.desc("cosine"), F.asc("vec_id")).limit(10)
+
+
+def _probe_cells(labs, cmat, qvec, nprobe: int):
+    """The ``nprobe`` centroid cells nearest ``qvec``, in the oracle's
+    tie order (round-6 cosine DESC, label ASC) — the probe set of both
+    ivf_knn and the persisted index's operators/ivf_index.py query."""
+    import numpy as np
+
+    qsims = _cosine(cmat, qvec, np.linalg.norm(qvec))
+    return labs[np.lexsort((labs, -qsims))[:nprobe]]
 
 
 IVF_KNN_SQL = f"""
@@ -1619,51 +1630,35 @@ def matryoshka_recall(spark: SparkSession, sf: str) -> DataFrame:
     import pandas as pd
 
     emb = load_table(spark, "embeddings", sf)
-    qrows = (
-        emb.filter(F.col("vec_id") < KNN_BATCH_QUERIES)
-        .select("vec_id", "embedding")
-        .collect()
+    _, qids, qmat, qnorm = _probe_side(
+        emb, F.col("vec_id") < KNN_BATCH_QUERIES
     )
-    qrows.sort(key=lambda r: r.vec_id)
-    qids = np.asarray([r.vec_id for r in qrows], dtype="int64")
-    qmat = np.asarray([list(r.embedding) for r in qrows], dtype="float64")
-    bc = spark.sparkContext.broadcast((qids, qmat))
+    bc = spark.sparkContext.broadcast((qids, qmat, qnorm))
 
     def partial_topk(batches):
-        qi, qm = bc.value
+        qi, qm, qn_f = bc.value
         qt = qm[:, :MATRYOSHKA_DIM]
-        qn_f = np.linalg.norm(qm, axis=1)
         qn_t = np.linalg.norm(qt, axis=1)
         for pdf in batches:
-            a = np.asarray(pdf["embedding"].tolist(), dtype="float64")
-            at = a[:, :MATRYOSHKA_DIM]
+            a = _vectors(pdf)
             ids = pdf["vec_id"].to_numpy()
-            sims = {
-                0: np.round(
-                    a @ qm.T / (np.linalg.norm(a, axis=1)[:, None] * qn_f),
-                    6,
-                ),
-                1: np.round(
-                    at @ qt.T / (np.linalg.norm(at, axis=1)[:, None] * qn_t),
-                    6,
-                ),
-            }
-            out_q, out_m, out_v, out_c = [], [], [], []
-            for metric, sm in sims.items():
-                for j in range(len(qi)):
-                    top = np.lexsort((ids, -sm[:, j]))[:MATRYOSHKA_K]
-                    out_q.append(np.full(len(top), qi[j]))
-                    out_m.append(np.full(len(top), metric))
-                    out_v.append(ids[top])
-                    out_c.append(sm[top, j])
-            yield pd.DataFrame(
-                {
-                    "qid": np.concatenate(out_q),
-                    "metric": np.concatenate(out_m),
-                    "vec_id": np.concatenate(out_v),
-                    "cosine": np.concatenate(out_c),
-                }
-            )
+            parts = []
+            for metric, sims in (
+                (0, _cosine(a, qm, qn_f)),
+                (1, _cosine(a[:, :MATRYOSHKA_DIM], qt, qn_t)),
+            ):
+                q, v, c = _partial_topk(ids, sims, qi, MATRYOSHKA_K)
+                parts.append(
+                    pd.DataFrame(
+                        {
+                            "qid": q,
+                            "metric": np.full(len(q), metric),
+                            "vec_id": v,
+                            "cosine": c,
+                        }
+                    )
+                )
+            yield pd.concat(parts, ignore_index=True)
 
     partial = (
         emb.filter(F.col("vec_id") >= KNN_BATCH_QUERIES)

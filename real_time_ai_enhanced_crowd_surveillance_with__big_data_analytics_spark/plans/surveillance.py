@@ -23,14 +23,13 @@ from ..functions.validators import (
 )
 from ..operators.detections import (
     CONFIDENCE_THRESHOLD,
+    CROWD_THRESHOLD,
     N_CLASSES,
     parse_detections,
     synthesize_raw,
 )
 from ..operators.nms import PERSON_IOU, nms
 from ..sources.tables import load_table
-
-CROWD_THRESHOLD = 3  # reference main.py:232
 
 
 # --- detection parsing (P2-P4, A3/A4; main.py:105-122) ----------------------

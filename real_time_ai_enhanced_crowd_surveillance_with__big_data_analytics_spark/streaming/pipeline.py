@@ -28,10 +28,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..operators.detections import parse_detections, synthesize_raw
+from ..operators.detections import (
+    CROWD_THRESHOLD,
+    parse_detections,
+    synthesize_raw,
+)
 from ..operators.nms import PERSON_IOU, nms_pandas
-
-CROWD_THRESHOLD = 3  # reference main.py:232
 
 _CROWD_OUTPUT_SCHEMA = T.StructType(
     [

@@ -6,7 +6,7 @@ import tempfile
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # streaming tests are dominated by checkpoint-log fsyncs (offset/commit
 # logs + state-store delta files, hundreds of tiny writes per test);

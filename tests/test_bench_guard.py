@@ -9,11 +9,12 @@ guard (`python tools/bench_compare.py`) is trustworthy.
 
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.plans import (  # noqa: E402
     QUERIES,

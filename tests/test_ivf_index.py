@@ -1,7 +1,8 @@
 """Persisted IVF index (operators/ivf_index.py): probe queries must
 read ONLY probed cell partitions (PartitionFilters in the scan plan),
 agree with a numpy reference over those cells, and achieve nontrivial
-recall vs exact brute force."""
+recall vs exact brute force; the persisted cells must be
+nearest_centroid's assignment."""
 
 from __future__ import annotations
 
@@ -11,6 +12,9 @@ import pytest
 from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.operators.ivf_index import (
     build_ivf_index,
     ivf_probe_query,
+)
+from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.plans.similarity import (
+    nearest_centroid,
 )
 from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.sources.tables import (
     load_table,
@@ -103,3 +107,34 @@ def test_recall_vs_bruteforce(spark, index):
     # ANN: probed cells must recover a meaningful share of the true
     # top-10 (driver testdata clusters by label, so recall is high)
     assert len(got & exact) >= 5
+
+
+def test_cell_is_nearest_centroid_assignment(spark, sf_dir, index):
+    """The persisted cell of every vector is nearest_centroid's
+    assigned_label: the index and the registry query share one
+    assignment kernel, so they cannot drift apart."""
+    d, emb = index
+    cells = {
+        r.vec_id: r.cell
+        for r in spark.read.parquet(f"{d}/vectors").select("vec_id", "cell").collect()
+    }
+    want = {
+        r.vec_id: r.assigned_label for r in nearest_centroid(spark, sf_dir).collect()
+    }
+    assert len(want) == emb.count()
+    assert cells == want
+
+
+def test_zero_vector_cosine_is_null(spark, tmp_path):
+    """A zero vector's cosine is 0/0: null, which is what the registry
+    queries and their DuckDB oracles return for it, not a guarded 0.0.
+    Its cell is still the first label, as in nearest_centroid."""
+    emb = spark.createDataFrame(
+        [(7, 5, [0.0] * 4)], "vec_id long, label int, embedding array<float>"
+    )
+    d = str(tmp_path)
+    build_ivf_index(emb, d)
+    stored = spark.read.parquet(f"{d}/vectors").collect()
+    assert [(r.vec_id, r.cell) for r in stored] == [(7, 5)]
+    got = ivf_probe_query(spark, d, [1.0, 0.0, 0.0, 0.0]).collect()
+    assert [(r.vec_id, r.cosine) for r in got] == [(7, None)]

@@ -1,9 +1,9 @@
 """RocksDB state store backend (SURVEY.md §2.9): the same stateful
 operator runs under RocksDBStateStoreProvider — the production backend
 for state larger than executor heap — and matches the default
-HDFS-backed provider's answer. (The Spark 4 transformWithState API
-stays protobuf-gated in stateful_tws.py; the state BACKEND itself
-ships inside Spark and is covered here.)
+HDFS-backed provider's answer. The operator is
+streaming/stateful.py's applyInPandasWithState rising-edge trigger;
+the state BACKEND ships inside Spark and is covered here.
 """
 
 from __future__ import annotations

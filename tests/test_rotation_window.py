@@ -5,9 +5,10 @@ query without a driver verdict or drop the canaries."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tools.rotation_planner import latest_verdicts  # noqa: E402
 

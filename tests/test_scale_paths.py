@@ -1,22 +1,17 @@
-"""Scale-path tests: MLlib LSH join, partitioned persistence with
-partition pruning, streaming crowd-pipeline parity (batch ≡ stream for
+"""Scale-path tests: partitioned persistence with partition pruning,
+streaming crowd-pipeline parity (batch ≡ stream for
 the flagship query)."""
 
 from __future__ import annotations
 
 import tempfile
 
-import pytest
 from pyspark.sql import functions as F
 
 from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.operators.historical import (
     events_with_day,
     read_partitioned,
     write_partitioned,
-)
-from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.operators.similarity_mllib import (
-    HAS_MLLIB,
-    ann_similarity_join,
 )
 from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.plans.relational import (
     CROWD_THRESHOLD,
@@ -30,16 +25,6 @@ from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.str
     run_to_memory,
     stream_events,
 )
-
-
-@pytest.mark.skipif(not HAS_MLLIB, reason="pyspark.ml unavailable")
-def test_mllib_ann_join_deterministic(spark, sf_dir):
-    emb = load_table(spark, "embeddings", sf_dir)
-    out = ann_similarity_join(emb, dist_threshold=12.0)
-    rows1 = sorted((r.ia, r.ib) for r in out.collect())
-    rows2 = sorted((r.ia, r.ib) for r in ann_similarity_join(emb, 12.0).collect())
-    assert rows1 == rows2  # seeded determinism
-    assert all(ia < ib for ia, ib in rows1)
 
 
 def test_partitioned_write_prunes(spark, sf_dir):

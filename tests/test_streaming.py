@@ -99,38 +99,6 @@ def test_streaming_session_window(spark, sf_dir):
     assert {r.user_id: r["count"] for r in batch_sessions.collect()} == stream_sessions
 
 
-def test_tws_edge_trigger_matches_batch_lag(spark, sf_dir):
-    """transformWithStateInPandas twin (streaming/stateful_tws.py) must
-    match the batch lag form exactly — same check as the
-    applyInPandasWithState parity test, newer state API."""
-    import pytest as _pytest
-
-    from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.streaming.stateful_tws import (
-        HAS_TWS,
-        streaming_rising_edges_tws,
-    )
-
-    if not HAS_TWS:
-        _pytest.skip("transformWithState unavailable")
-    stream = stream_events(spark, sf_dir)
-    q = run_to_memory(streaming_rising_edges_tws(stream, THRESHOLD), "tws_out")
-    try:
-        got = {
-            (r.user_id, r.event_id): r.episode
-            for r in spark.sql("SELECT * FROM tws_out").collect()
-        }
-    finally:
-        q.stop()
-    events = load_table(spark, "events", sf_dir)
-    batch = rising_edges(
-        events, F.col("value") > THRESHOLD, ["user_id"], "event_id", "alarm"
-    ).filter(F.col("alarm_edge"))
-    want = {
-        (r.user_id, r.event_id): r.alarm_episode for r in batch.collect()
-    }
-    assert got == want
-
-
 def test_streaming_session_windows_match_batch(spark, sf_dir):
     """Native merging session windows: sessions split across replay
     micro-batches must merge in the state store and equal the batch

@@ -11,6 +11,7 @@ sorted, values stringified). Usage::
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 
@@ -103,7 +104,7 @@ def main() -> int:
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as e
     from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark import (
         get_spark,

@@ -37,9 +37,10 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark import (  # noqa: E402
     get_spark,

@@ -13,11 +13,12 @@ Usage::
 from __future__ import annotations
 
 import re
+import os
 import sys
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:

@@ -30,16 +30,20 @@ from __future__ import annotations
 
 import glob
 import json
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 WINDOW = 50
 CANARIES = ["crowded_frames", "revenue_by_nation"]
 
 
-def latest_verdicts(pattern: str = "/root/repo/CORRECTNESS_r*.json"):
+def latest_verdicts(
+    pattern: str = os.path.join(ROOT, "CORRECTNESS_r*.json"),
+):
     """name -> (round, ok) for the most recent round that checked it."""
     out: dict[str, tuple[int, bool]] = {}
     for path in sorted(glob.glob(pattern)):

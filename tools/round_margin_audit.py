@@ -32,6 +32,7 @@ from __future__ import annotations
 
 import math
 import re
+import os
 import sys
 
 import duckdb
@@ -102,7 +103,7 @@ def main() -> int:
     sf = args[0] if args and "/" in args[0] else "/root/testdata/sf0.01"
     only = set(a for a in args if "/" not in a)
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as e
 
     con = duckdb.connect()
