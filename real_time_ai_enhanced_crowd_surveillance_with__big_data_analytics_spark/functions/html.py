@@ -1,9 +1,9 @@
 """HTML boilerplate removal as pure Column expressions — the text-
-extraction stage between WARC ingestion (sources/warc.py) and the
-corpus operators (quality, dedup, tokenization), in the spirit of the
-published extraction heuristics (jusText/trafilatura-class: strip
-non-content blocks, then tags, then measure link density as the
-boilerplate signal).
+extraction stage in front of the corpus operators (quality, dedup,
+tokenization), in the spirit of the published extraction heuristics
+(jusText/trafilatura-class: strip non-content blocks, then tags, then
+measure link density as the boilerplate signal; the link-density
+column itself is ``plans/text.py::html_extract_quality``).
 
 Everything is codegen'd regexp_replace / regexp_extract_all — no
 Python in the hot path, so extraction runs at scan speed over a crawl.
@@ -71,25 +71,3 @@ def html_title(html: Column) -> Column:
     raw = F.regexp_extract(html, r"(?is)<title\b[^>]*>(.*?)</title\s*>", 1)
     return F.trim(F.regexp_replace(_decode_entities(raw), r"\s+", " "))
 
-
-def link_density(html: Column) -> Column:
-    """Share of the visible text that sits inside <a> anchors — the
-    classic boilerplate/navigation signal (link-farm pages score near
-    1, article bodies near 0). Anchors are extracted from the
-    non-content-stripped markup (an <a> inside a script/style/comment
-    block contributes no visible text, so it must not count), each
-    anchor's inner HTML is tag-stripped, and the character mass is
-    compared to the whole document's visible text. Clamped to [0, 1]
-    so malformed markup can never report an impossible ratio. 0.0 for
-    documents with no visible text."""
-    content = _strip_noncontent(html)
-    anchors = F.regexp_extract_all(content, F.lit(_ANCHOR), F.lit(1))
-    anchor_chars = F.aggregate(
-        F.transform(anchors, lambda a: F.length(html_to_text(a))),
-        F.lit(0),
-        lambda acc, n: acc + n,
-    )
-    total = F.length(html_to_text(html))
-    return F.when(
-        total > 0, F.least(F.round(anchor_chars / total, 6), F.lit(1.0))
-    ).otherwise(F.lit(0.0))

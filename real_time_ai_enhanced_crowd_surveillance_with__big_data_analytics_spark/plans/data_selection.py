@@ -66,25 +66,10 @@ def _token_bucket(token: Column) -> Column:
     return (fp % DSIR_BUCKETS).alias("h")
 
 
-def dsir_q_table(docs: DataFrame) -> DataFrame:
-    """The DSIR corpus statistic: per-bucket quantized micro-nat log
-    importance ratios, (h, q) — B rows regardless of corpus size.
-    Shared by the batch ranking below and the streaming ingest screen
-    (streaming/dsir_screen.py), so the two paths cannot drift."""
-    tok = docs.select(
-        "lang", F.explode(tokens(F.col("text"))).alias("token")
-    ).select("lang", _token_bucket(F.col("token")))
-    buckets = tok.groupBy("h").agg(
-        F.count("*").alias("raw_h"),
-        F.count_if(F.col("lang") == DSIR_TARGET_LANG).alias("tgt_h"),
-    )
-    return _q_from_buckets(buckets)
-
-
 def _q_from_buckets(buckets: DataFrame) -> DataFrame:
     """(h, q) from the (h, raw_h, tgt_h) bucket histogram — the shared
-    Laplace-smoothed quantized-log-ratio math, one definition for the
-    q-table builder and the single-pass ranking below."""
+    Laplace-smoothed quantized-log-ratio math of the single-pass
+    ranking below."""
     totals = buckets.agg(
         F.sum("raw_h").alias("raw_n"), F.sum("tgt_h").alias("tgt_n")
     )

@@ -708,7 +708,7 @@ def _doc_sids(memo: dict, pdf, distinct: bool):
     for did, tk in zip(pdf["doc_id"], pdf["tk"]):
         # a NULL text row arrives as tk=None — the old explode pipeline
         # dropped it silently; mirror that instead of crashing the task
-        # (ADVICE r9: warc-shaped document frames can carry null text)
+        # (ADVICE r9: crawl-shaped document frames can carry null text)
         if tk is None:
             continue
         n = len(tk)

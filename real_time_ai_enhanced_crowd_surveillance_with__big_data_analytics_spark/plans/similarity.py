@@ -49,10 +49,14 @@ def _duck_cosine(a: str, b: str) -> str:
 def _probe_side(emb: DataFrame, cond, *extra: str):
     """The tiny side of a broadcast-probe scoring: rows matching
     ``cond``, sorted by vec_id, as (rows, vec_ids, float64 matrix, row
-    norms). ``extra`` columns ride along on ``rows``."""
+    norms). ``extra`` columns ride along on ``rows``. Every caller's
+    ``cond`` keeps a prefix of the vec_id range, so no matching row
+    means an empty table: ValueError("empty embeddings table")."""
     import numpy as np
 
     rows = emb.filter(cond).select("vec_id", *extra, "embedding").collect()
+    if not rows:
+        raise ValueError("empty embeddings table")
     rows.sort(key=lambda r: r.vec_id)
     ids = np.asarray([r.vec_id for r in rows], dtype="int64")
     mat = np.asarray([list(r.embedding) for r in rows], dtype="float64")
@@ -534,8 +538,7 @@ def nearest_centroid(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _cosine_assign(bc, pdf):
-    """Shared assignment kernel for nearest_centroid / kmeans_refine /
-    operators/ivf_index.py::build_ivf_index:
+    """Shared assignment kernel for nearest_centroid / kmeans_refine:
     round-6 cosine against the broadcast (labels, centroids, norms),
     argmax taking the FIRST maximum so ties break toward the smallest
     label — the rule both oracles' ``csim DESC, clabel ASC`` rank
@@ -694,7 +697,9 @@ def _corpus_rotation(emb: DataFrame):
     eigendecomposes. Only ORTHONORMALITY matters for correctness (dot
     products are rotation-invariant and the Cauchy–Schwarz tail bound
     holds in any orthonormal basis); the eigen-ordering just maximizes
-    head energy so the bound prunes as hard as the spectrum allows."""
+    head energy so the bound prunes as hard as the spectrum allows.
+    An empty corpus has no Gram matrix: ValueError("empty embeddings
+    table")."""
     import numpy as np
     import pandas as pd
 
@@ -709,6 +714,8 @@ def _corpus_rotation(emb: DataFrame):
         .mapInPandas(partial, schema="g array<double>")
         .collect()
     )
+    if not parts:
+        raise ValueError("empty embeddings table")
     dim = int(round(len(parts[0]["g"]) ** 0.5))
     gram = np.zeros((dim, dim))
     for r in parts:
@@ -1121,8 +1128,8 @@ def ivf_knn(spark: SparkSession, sf: str) -> DataFrame:
 
 def _probe_cells(labs, cmat, qvec, nprobe: int):
     """The ``nprobe`` centroid cells nearest ``qvec``, in the oracle's
-    tie order (round-6 cosine DESC, label ASC) — the probe set of both
-    ivf_knn and the persisted index's operators/ivf_index.py query."""
+    tie order (round-6 cosine DESC, label ASC) — the probe set of
+    ivf_knn."""
     import numpy as np
 
     qsims = _cosine(cmat, qvec, np.linalg.norm(qvec))
@@ -1438,11 +1445,9 @@ def neardup_pagerank(spark: SparkSession, sf: str) -> DataFrame:
     down-weighting in a training mix, while rank ≈ the teleport base
     marks genuinely unique content.
 
-    This is the oracle-checkable twin of ``operators/pagerank.py``
-    (the general float operator with standard dangling
-    redistribution, numpy-parity tested): the registry query trades
-    dangling handling for cross-engine exactness so the driver can
-    hash-compare it against DuckDB.
+    The query trades standard dangling redistribution for
+    cross-engine exactness so the driver can hash-compare it against
+    DuckDB.
 
     Determinism: all arithmetic is int64 — rank mass ``PR_SCALE`` is
     split by integer division, per-round contributions are

@@ -790,8 +790,7 @@ FROM toks
 
 def html_extract_quality(spark: SparkSession, sf: str) -> DataFrame:
     """Hash-verified twin of the crawl text-extraction stage
-    (functions/html.py, the WARC → corpus seam in sources/warc.py::
-    warc_text_corpus): both engines wrap each document's text in the
+    (functions/html.py): both engines wrap each document's text in the
     SAME deterministic markup — title carrying an entity, script/
     style/noscript blocks, an HTML comment hiding an anchor, and a
     doc_id-length visible anchor — then run the extraction rules and

@@ -1016,8 +1016,7 @@ def state_merge_rollup(spark: SparkSession, sf: str) -> DataFrame:
     engine/partitioning). ``n_state_shards`` makes the merge
     observable: 2 where a late partial met on-time state.
 
-    Streaming twin: ``streaming/rollup.py`` (exactly-once foreachBatch
-    merge into the same state shape); distinct-count analog:
+    Distinct-count analog:
     ``sketch_rollup`` (HLL sketches — mergeable state for the one
     aggregate count/sum/min/max cannot express).
     """

@@ -10,7 +10,7 @@ operator is its alerting edge — a security desk wants one page per
 hot place per window, at crossing time, not a table to poll.
 
 State per cell is a small parallel-array ledger of open windows
-(win_start, count, alerted) — the k_anon_gate array-state pattern.
+(win_start, count, alerted).
 Windows whose end has passed the watermark are evicted on every
 invocation, so state per cell is (windows in flight) entries and the
 cell key space itself is world-bounded. Idle cells are dropped by an

@@ -90,7 +90,7 @@ def stream_events(spark: SparkSession, sf_path: str) -> DataFrame:
     carry across batches, unlike a single-file single-batch replay.
     Same column surface as the batch loader, so every batch plan
     composes unchanged; production swaps this for a Kafka/file-drop
-    source with the same schema (sources/kafka.py).
+    source with the same schema.
 
     The file-source schema comes from the replay files' parquet footer
     (streaming sources can't infer), so the physical ts shape

@@ -1,19 +1,14 @@
-"""HTML text extraction: hand-computed extraction/title/link-density
-on crafted documents, plus the WARC -> text-corpus pipeline end-to-end
-(crafted crawl directory through Spark).
+"""HTML text extraction: hand-computed visible text and title on
+crafted documents.
 """
 
 from __future__ import annotations
 
-import gzip
-
-import pytest
 from pyspark.sql import functions as F
 
 from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.functions.html import (
     html_title,
     html_to_text,
-    link_density,
 )
 
 PAGE = (
@@ -28,7 +23,6 @@ PAGE = (
 PAGE_TEXT = "The & Title Head line alpha beta gamma <tag>"
 # title tag participates in visible text? <title> is a normal tag here —
 # its inner text survives tag-stripping, matching the simple heuristic.
-LINKFARM = '<body><a href="a">one</a> <a href="b">two</a></body>'
 
 
 def _df(spark, html):
@@ -59,91 +53,3 @@ def test_html_title(spark):
         .first()["t"]
         == ""
     )
-
-
-def test_link_density(spark):
-    def dens(html):
-        return (
-            _df(spark, html)
-            .select(link_density(F.col("html")).alias("d"))
-            .first()["d"]
-        )
-
-    # PAGE: anchors contribute "beta" (4 chars) of the visible chars
-    assert dens(PAGE) == round(4 / len(PAGE_TEXT), 6)
-    # link farm: all visible text inside anchors ("one two" -> 6 of 7)
-    assert dens(LINKFARM) == round(6 / 7, 6)
-    # no visible text at all -> 0.0 by definition
-    assert dens("<script>only()</script>") == 0.0
-
-
-def _record(uri, payload, rid):
-    head = (
-        f"WARC/1.0\r\nWARC-Type: response\r\n"
-        f"WARC-Record-ID: <urn:uuid:{rid}>\r\n"
-        f"WARC-Date: 2024-01-05T00:00:00Z\r\n"
-        f"WARC-Target-URI: {uri}\r\n"
-        f"Content-Length: {len(payload)}\r\n\r\n"
-    ).encode()
-    return head + payload + b"\r\n\r\n"
-
-
-def _http(status, ctype, body):
-    return (
-        f"HTTP/1.1 {status} X\r\nContent-Type: {ctype}\r\n\r\n"
-    ).encode() + body
-
-
-@pytest.fixture(scope="module")
-def crawl_dir(tmp_path_factory):
-    d = tmp_path_factory.mktemp("crawl")
-    recs = (
-        _record("http://a/page", _http(200, "text/html", PAGE.encode()), "a")
-        + _record("http://a/miss", _http(404, "text/html", b"<p>gone</p>"), "m")
-        + _record("http://a/json", _http(200, "application/json", b"{}"), "j")
-        + _record(
-            "http://a/farm", _http(200, "text/html; charset=utf-8", LINKFARM.encode()), "f"
-        )
-    )
-    (d / "c.warc.gz").write_bytes(gzip.compress(recs))
-    return str(d)
-
-
-def test_warc_text_corpus_end_to_end(spark, crawl_dir):
-    from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.sources.warc import (
-        warc_text_corpus,
-    )
-
-    rows = {r["url"]: r for r in warc_text_corpus(spark, crawl_dir).collect()}
-    # only the 200 text/html responses survive
-    assert set(rows) == {"http://a/page", "http://a/farm"}
-    page = rows["http://a/page"]
-    assert page["text"] == PAGE_TEXT
-    assert page["title"] == "The & Title"
-    assert rows["http://a/farm"]["link_density"] == round(6 / 7, 6)
-    assert page["doc_id"] is not None
-
-
-def test_link_density_ignores_anchors_in_noncontent_blocks(spark):
-    # the <a> inside <script> contributes no visible text, so it must
-    # not inflate the numerator — and the ratio can never exceed 1.0
-    page = (
-        '<script>document.write(\'<a href="/x">ggggggggggggggggg</a>\');'
-        "</script><body>ab <a href='/y'>cd</a></body>"
-    )
-    got = (
-        _df(spark, page)
-        .select(link_density(F.col("html")).alias("d"))
-        .first()["d"]
-    )
-    # visible text "ab cd" (5 chars), anchor text "cd" (2 chars)
-    assert got == pytest.approx(2 / 5, abs=1e-6)
-
-    # adversarial: comment-wrapped anchors only -> no visible anchors
-    only_hidden = "<!-- <a href='/z'>zzzz</a> --><body>plain</body>"
-    got2 = (
-        _df(spark, only_hidden)
-        .select(link_density(F.col("html")).alias("d"))
-        .first()["d"]
-    )
-    assert got2 == 0.0

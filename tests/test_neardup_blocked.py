@@ -2,12 +2,16 @@
 tiled BLAS anchor (losslessness of the Cauchy–Schwarz head bound in an
 orthonormal basis) while certifying a measurable fraction of pairs
 after only the k head dims. Oracle parity at sf0.01 (against the
-anchor's own SQL) is the driver/check_oracle gate.
+anchor's own SQL) is the driver/check_oracle gate. On an empty
+embeddings table every near-dup query raises the same documented
+ValueError.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow.parquet as pq
+import pytest
 
 from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.plans.similarity import (
     NEARDUP_BLOCK_CUT,
@@ -15,6 +19,7 @@ from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.pla
     _corpus_rotation,
     embedding_neardup_blocked,
     embedding_neardup_exact,
+    embedding_neardup_lsh,
 )
 from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.sources.tables import (
     load_table,
@@ -55,3 +60,14 @@ def test_rotation_orthonormal_and_bound_prunes(spark, sf_dir):
     # losslessness cross-check on raw values: no pruned pair is a hit
     full = mat @ mat.T
     assert not ((bound < NEARDUP_BLOCK_CUT) & (np.round(full, 6) >= 0.4)).any()
+
+
+@pytest.mark.parametrize(
+    "query",
+    [embedding_neardup_exact, embedding_neardup_blocked, embedding_neardup_lsh],
+)
+def test_empty_table_raises_documented_error(spark, sf_dir, tmp_path, query):
+    empty = pq.read_table(f"{sf_dir}/embeddings.parquet").slice(0, 0)
+    pq.write_table(empty, str(tmp_path / "embeddings.parquet"))
+    with pytest.raises(ValueError, match="^empty embeddings table$"):
+        query(spark, str(tmp_path)).collect()

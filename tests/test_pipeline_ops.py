@@ -100,33 +100,6 @@ def test_session_window_boundary_semantics(spark):
     assert sessions == {1: 1, 2: 2}
 
 
-def test_build_observation_matches_direct_aggregation(spark, sf_dir):
-    """Observation metrics ride the consuming action (no second scan)
-    and equal a direct aggregation over the same frame."""
-    from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.operators.telemetry import (
-        with_build_observation,
-    )
-    from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.plans.training_data import (
-        corpus_build_pipeline,
-    )
-
-    build = corpus_build_pipeline(spark, sf_dir)
-    observed, obs = with_build_observation(build)
-    observed.write.mode("overwrite").format("noop").save()  # one action
-    got = obs.get
-    import pyspark.sql.functions as F
-
-    want = build.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_tok").alias("n_tokens"),
-        F.round(F.avg("quality"), 6).alias("mean_quality"),
-    ).first()
-    assert got["n_docs"] == want.n_docs > 0
-    assert got["n_tokens"] == want.n_tokens
-    assert got["mean_quality"] == want.mean_quality
-    assert got["null_quality"] == 0
-
-
 def test_pii_redact_masks_synthetic_pii(spark, sf_dir):
     """The corpus carries no PII, so prove the masking on synthetic
     rows: emails → [EMAIL], digit runs → [NUM], keywords → [TERM],

@@ -1,9 +1,16 @@
 """RocksDB state store backend (SURVEY.md §2.9): the same stateful
 operator runs under RocksDBStateStoreProvider — the production backend
 for state larger than executor heap — and matches the default
-HDFS-backed provider's answer. The operator is
-streaming/stateful.py's applyInPandasWithState rising-edge trigger;
-the state BACKEND ships inside Spark and is covered here.
+HDFS-backed provider's answer. Two operators run under both providers:
+
+- streaming/stateful.py's applyInPandasWithState rising-edge trigger
+  (scalar per-user state);
+- streaming/pipeline.py's crowd pipeline, the ``crowd_stream``
+  benchmark workload: per-frame box arrays carried across
+  micro-batches and an armed EventTimeTimeout that evicts frames once
+  the watermark passes them.
+
+The state BACKEND ships inside Spark and is covered here.
 """
 
 from __future__ import annotations
@@ -12,7 +19,18 @@ import datetime as dt
 import os
 
 from conftest import events_chunk_schema, write_events_chunk
+from pyspark.sql import functions as F
 
+from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.operators.detections import (
+    parse_detections,
+    synthesize_raw,
+)
+from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.operators.nms import (
+    nms,
+)
+from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.streaming.pipeline import (
+    streaming_crowd_alerts,
+)
 from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.streaming.stateful import (
     streaming_rising_edges,
 )
@@ -25,12 +43,8 @@ _ROCKSDB = (
 T0 = dt.datetime(2024, 1, 1)
 
 
-def _run(spark, src, qname):
-    stream = (
-        spark.readStream.schema(events_chunk_schema())
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+def _rising_edges(spark, stream, tag, tmp_path):
+    qname = f"edges_{tag}"
     q = (
         streaming_rising_edges(stream, threshold=150.0)
         .writeStream.format("memory")
@@ -48,6 +62,56 @@ def _run(spark, src, qname):
         q.stop()
 
 
+def _crowd_alerts(spark, stream, tag, tmp_path):
+    """Latest verdict per frame, plus the frames still held in state
+    when the replay drains (the evicted ones are gone)."""
+    got = {}
+
+    def sink(df, _bid):
+        for r in df.collect():
+            got[(r.camera_id, r.frame_id)] = (r.n_persons, r.crowded)
+
+    q = streaming_crowd_alerts(
+        stream,
+        sink,
+        watermark="1 hour",
+        frame_ttl_ms=30 * 60_000,
+        checkpoint_dir=str(tmp_path / f"crowd_ckpt_{tag}"),
+    )
+    try:
+        q.processAllAvailable()
+        held = q.lastProgress["stateOperators"][0]["numRowsTotal"]
+    finally:
+        q.stop()
+    return got, held
+
+
+def _run(spark, src, pipeline, tmp_path):
+    """``pipeline`` over the chunked replay in ``src``, once under the
+    default provider and once under RocksDB; the two answers must be
+    equal. Returns the RocksDB answer."""
+    def once(tag):
+        stream = (
+            spark.readStream.schema(events_chunk_schema())
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        return pipeline(spark, stream, tag, tmp_path)
+
+    default = once("hdfs")
+    prev = spark.conf.get(_PROVIDER_CONF, None)
+    spark.conf.set(_PROVIDER_CONF, _ROCKSDB)
+    try:
+        rocks = once("rocksdb")
+    finally:
+        if prev is None:
+            spark.conf.unset(_PROVIDER_CONF)
+        else:
+            spark.conf.set(_PROVIDER_CONF, prev)
+    assert rocks == default
+    return rocks
+
+
 def test_rocksdb_state_store_matches_default(spark, tmp_path):
     src = str(tmp_path / "src")
     os.makedirs(src)
@@ -60,172 +124,37 @@ def test_rocksdb_state_store_matches_default(spark, tmp_path):
         spark, src, "f2",
         [(1, 4, 300.0, T0), (2, 5, 100.0, T0), (2, 6, 400.0, T0)],
     )
-    default = _run(spark, src, "hdfs_state_out")
-    prev = spark.conf.get(_PROVIDER_CONF, None)
-    spark.conf.set(_PROVIDER_CONF, _ROCKSDB)
-    try:
-        rocks = _run(spark, src, "rocksdb_state_out")
-    finally:
-        if prev is None:
-            spark.conf.unset(_PROVIDER_CONF)
-        else:
-            spark.conf.set(_PROVIDER_CONF, prev)
-    assert rocks == default
+    rocks = _run(spark, src, _rising_edges, tmp_path)
     assert rocks == {(1, 1): 1, (2, 3): 1, (1, 4): 2, (2, 6): 2}
 
 
-def test_rocksdb_heavy_hitters_matches_default(spark, tmp_path):
-    """The Space-Saving cells (array-typed state) survive the RocksDB
-    provider identically: same snapshot as the HDFS-backed default
-    over the same chunked replay."""
-    from collections import Counter
-
-    from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.streaming.heavy_hitters import (
-        heavy_hitters_snapshot,
-        streaming_heavy_hitters,
-    )
-
-    src = str(tmp_path / "hh_src")
+def test_rocksdb_crowd_alerts_matches_default(spark, tmp_path):
+    src = str(tmp_path / "src")
     os.makedirs(src)
-    rows = [
-        (uid, eid, 1.0, T0)
-        for eid, uid in enumerate([7] * 9 + [3] * 5 + [11] * 3 + [2, 5, 8])
-    ]
-    write_events_chunk(spark, src, "f1", rows[0::2])
-    write_events_chunk(spark, src, "f2", rows[1::2])
-
-    def run(qname):
-        stream = (
-            spark.readStream.schema(events_chunk_schema())
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            streaming_heavy_hitters(stream, capacity=16, n_cells=2)
-            .writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("update")
-            .start()
-        )
-        q.processAllAvailable()
-        try:
-            return [
-                (r["rank"], r["user_id"], r["est"], r["err"])
-                for r in heavy_hitters_snapshot(
-                    spark.sql(f"select * from {qname}"), top=4
-                ).collect()
-            ]
-        finally:
-            q.stop()
-
-    default = run("hh_state_hdfs")
-    prev = spark.conf.get(_PROVIDER_CONF, None)
-    spark.conf.set(_PROVIDER_CONF, _ROCKSDB)
-    try:
-        rocks = run("hh_state_rocksdb")
-    finally:
-        if prev is None:
-            spark.conf.unset(_PROVIDER_CONF)
-        else:
-            spark.conf.set(_PROVIDER_CONF, prev)
-    assert rocks == default
-    true = Counter(r[0] for r in rows)
-    want = sorted(true.items(), key=lambda kv: (-kv[1], kv[0]))[:4]
-    assert [(u, e) for _, u, e, _ in rocks] == want
-
-
-def test_rocksdb_k_anon_gate_matches_default(spark, tmp_path):
-    """The privacy gate's held-backlog state (two capped long arrays +
-    flag) survives the RocksDB provider identically: same released set
-    as the HDFS-backed default over the same chunked replay, including
-    a class that crosses its thresholds only in the second chunk."""
-    from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.streaming.k_anon_gate import (
-        streaming_k_anon_gate,
+    # camera 1's frames get boxes in both chunks (event_id % 50 is the
+    # frame), so their box arrays cross micro-batches; camera 2's
+    # frames appear only in the first chunk, two hours before the
+    # second, so the watermark passes their timeout and evicts them.
+    late = T0 + dt.timedelta(hours=2)
+    write_events_chunk(
+        spark, src, "f1",
+        [(1, e, 1.0, T0) for e in range(200)]
+        + [(2, e, 1.0, T0) for e in range(1000, 1100)],
     )
-
-    src = str(tmp_path / "gate_src")
-    os.makedirs(src)
-    # band 0 (value 7.5): 6 rows / 3 users -> opens mid-chunk-2;
-    # band 1 (value 107.5): 4 rows / 1 user -> never opens
-    rows = (
-        [(400 + i % 3, i, 7.5, T0) for i in range(6)]
-        + [(500, 10 + i, 107.5, T0) for i in range(4)]
+    write_events_chunk(
+        spark, src, "f2", [(1, e, 1.0, late) for e in range(200, 400)]
     )
-    write_events_chunk(spark, src, "f1", rows[0::2])
-    write_events_chunk(spark, src, "f2", rows[1::2])
-
-    def run(tag):
-        sink = str(tmp_path / f"out_{tag}")
-        ckpt = str(tmp_path / f"ckpt_{tag}")
-        stream = (
-            spark.readStream.schema(events_chunk_schema())
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            streaming_k_anon_gate(stream, k=5, l_div=3)
-            .writeStream.foreachBatch(
-                lambda df, bid: df.write.mode("append").parquet(sink)
-            )
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return {
-            (r["value_band"], r["event_id"], r["user_id"])
-            for r in spark.read.parquet(sink).collect()
-        }
-
-    default = run("hdfs")
-    prev = spark.conf.get(_PROVIDER_CONF, None)
-    spark.conf.set(_PROVIDER_CONF, _ROCKSDB)
-    try:
-        rocks = run("rocks")
-    finally:
-        if prev is None:
-            spark.conf.unset(_PROVIDER_CONF)
-        else:
-            spark.conf.set(_PROVIDER_CONF, prev)
-    assert rocks == default
-    assert {e for _b, e, _u in rocks} == set(range(6))  # band 0 only
-
-
-def test_rocksdb_anomaly_gate_matches_default(spark, tmp_path):
-    """The anomaly gate's cell state (baseline ints + pending-hour
-    arrays + an armed event-time timeout) survives the RocksDB provider
-    identically: same finalized-hour score rows as the HDFS-backed
-    default, including the zero-filled gap hour."""
-    from test_streaming_anomaly_gate import _drain, _rows
-
-    src = str(tmp_path / "anom_src")
-    os.makedirs(src)
-    rows = _rows()
-    half = len(rows) // 2
-    write_events_chunk(spark, src, "f1", rows[:half])
-    write_events_chunk(spark, src, "f2", rows[half:])
-
-    def run(tag):
-        out = str(tmp_path / f"anom_out_{tag}")
-        _drain(spark, src, str(tmp_path / f"anom_ckpt_{tag}"), out)
-        return {
-            tuple(r[c] for c in ("hour_start_ms", "hod", "cnt",
-                                 "baseline_n", "dev", "thr",
-                                 "is_anomaly"))
-            for r in spark.read.parquet(out).collect()
-        }
-
-    default = run("hdfs")
-    prev = spark.conf.get(_PROVIDER_CONF, None)
-    spark.conf.set(_PROVIDER_CONF, _ROCKSDB)
-    try:
-        rocks = run("rocks")
-    finally:
-        if prev is None:
-            spark.conf.unset(_PROVIDER_CONF)
-        else:
-            spark.conf.set(_PROVIDER_CONF, prev)
-    assert rocks == default and len(rocks) == 10
+    got, held = _run(spark, src, _crowd_alerts, tmp_path)
+    # batch twin: the same detections through the batch NMS operator
+    det = parse_detections(synthesize_raw(spark.read.parquet(src)))
+    kept = nms(det, ["camera_id", "frame_id"], order_cols=["event_id"])
+    want = {
+        (r.camera_id, r.frame_id): r.n
+        for r in kept.groupBy("camera_id", "frame_id")
+        .agg(F.count("*").alias("n"))
+        .collect()
+    }
+    assert {k: n for k, (n, _) in got.items()} == want
+    assert any(crowded for _, crowded in got.values())
+    # only camera 1's frames are still held; camera 2's were evicted
+    assert held == sum(1 for cam, _ in want if cam == 1) < len(want)

@@ -1,22 +1,14 @@
-"""Backpressure + Kafka-seam tests (SURVEY.md §2.9 'Backpressure').
+"""Backpressure tests (SURVEY.md §2.9 'Backpressure').
 
 The reference loop has no backpressure — it blocks on inference and
 silently drops frames (main.py:145-149). Our mapping bounds micro-batch
 size instead: maxFilesPerTrigger on the file source (tested here, the
-in-container stand-in for Kafka's maxOffsetsPerTrigger) so each
+file-source form of Kafka's maxOffsetsPerTrigger) so each
 micro-batch is a bounded unit of work.
 """
 
 from __future__ import annotations
 
-import json
-
-from pyspark.sql import functions as F
-
-from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.sources.kafka import (
-    kafka_source_options,
-    parse_kafka_payload,
-)
 from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.sources.tables import (
     load_table,
 )
@@ -52,49 +44,3 @@ def test_max_files_per_trigger_bounds_microbatches(spark, sf_dir, tmp_path):
     assert sum(batches) == total
     assert len(batches) >= 4  # one file per trigger, not one giant batch
     assert max(batches) < total  # no unbounded micro-batch
-
-
-def test_kafka_option_construction():
-    opts = kafka_source_options(
-        "broker:9092", "events", max_offsets_per_trigger=5000
-    )
-    assert opts["kafka.bootstrap.servers"] == "broker:9092"
-    assert opts["subscribe"] == "events"
-    assert opts["startingOffsets"] == "earliest"
-    assert opts["maxOffsetsPerTrigger"] == "5000"
-    assert opts["failOnDataLoss"] == "false"
-    assert "maxOffsetsPerTrigger" not in kafka_source_options("b", "t")
-
-
-def test_kafka_payload_decode(spark):
-    rows = [
-        (
-            json.dumps(
-                {
-                    "event_id": 1,
-                    "ts": "2026-01-02 03:04:05",
-                    "user_id": 7,
-                    "event_type": "click",
-                    "value": 1.5,
-                    "props": "{}",
-                }
-            ).encode(),
-        ),
-        (b"not json at all",),
-    ]
-    records = spark.createDataFrame(rows, "value binary").withColumn(
-        "timestamp", F.current_timestamp()
-    )
-    out = parse_kafka_payload(records).orderBy(F.col("corrupt"))
-    got = out.collect()
-    assert [r["corrupt"] for r in got] == [False, True]
-    ok = got[0]
-    assert ok["event_id"] == 1
-    assert ok["event_type"] == "click"
-    assert ok["value"] == 1.5
-    assert str(ok["ts"]) == "2026-01-02 03:04:05"
-    # typed surface matches the batch loader's columns + provenance
-    assert out.columns == [
-        "event_id", "ts", "user_id", "event_type", "value", "props",
-        "ingest_ts", "corrupt",
-    ]
