@@ -538,7 +538,8 @@ def nearest_centroid(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _cosine_assign(bc, pdf):
-    """Shared assignment kernel for nearest_centroid / kmeans_refine:
+    """Shared assignment kernel for nearest_centroid / kmeans_refine /
+    operators/ivf_index.py::build_ivf_index:
     round-6 cosine against the broadcast (labels, centroids, norms),
     argmax taking the FIRST maximum so ties break toward the smallest
     label — the rule both oracles' ``csim DESC, clabel ASC`` rank
@@ -1128,8 +1129,8 @@ def ivf_knn(spark: SparkSession, sf: str) -> DataFrame:
 
 def _probe_cells(labs, cmat, qvec, nprobe: int):
     """The ``nprobe`` centroid cells nearest ``qvec``, in the oracle's
-    tie order (round-6 cosine DESC, label ASC) — the probe set of
-    ivf_knn."""
+    tie order (round-6 cosine DESC, label ASC) — the probe set of both
+    ivf_knn and the persisted index's operators/ivf_index.py query."""
     import numpy as np
 
     qsims = _cosine(cmat, qvec, np.linalg.norm(qvec))
@@ -1445,9 +1446,11 @@ def neardup_pagerank(spark: SparkSession, sf: str) -> DataFrame:
     down-weighting in a training mix, while rank ≈ the teleport base
     marks genuinely unique content.
 
-    The query trades standard dangling redistribution for
-    cross-engine exactness so the driver can hash-compare it against
-    DuckDB.
+    This is the oracle-checkable twin of ``operators/pagerank.py``
+    (the general float operator with standard dangling
+    redistribution, numpy-parity tested): the registry query trades
+    dangling handling for cross-engine exactness so the driver can
+    hash-compare it against DuckDB.
 
     Determinism: all arithmetic is int64 — rank mass ``PR_SCALE`` is
     split by integer division, per-round contributions are

@@ -4,10 +4,12 @@ The closure is computed from source with ``ast`` (no Spark, no
 imports): start at ``ROOTS``, follow every relative and absolute
 import of a package module, function-local ones included, and add the
 parent packages each import runs. A module outside the closure fails
-the test unless ``ALLOWLIST`` names it with a reason; an allowlist
-entry that is reached, or that names no module, fails it too.
+the test unless ``ALLOWLIST`` or ``DEFERRED`` names it with a reason;
+an entry of either that is reached, or that names no module, fails it
+too.
 
 A new module is wired from a root or gets an allowlist entry here.
+``DEFERRED`` only shrinks: no new module goes on it.
 """
 
 from __future__ import annotations
@@ -37,6 +39,21 @@ ALLOWLIST = {
     "sources.sqlite_source": "S4: the Django SQLite user store",
     "streaming.sinks": "S6: alarm sink, once per crowding episode",
     "sources.httpform": "S8: the login form source",
+}
+
+# unreached modules that still carry their own passing tests and are
+# kept for now; each is to be wired from a root or deleted with its
+# tests. module -> the test file that covers it
+DEFERRED = {
+    "sources.arrow_ipc": "tests/test_arrow_ipc_source.py",
+    "sources.columnar": "tests/test_columnar_formats.py",
+    "sources.text_formats": "tests/test_text_formats.py",
+    "operators.ivf_index": "tests/test_ivf_index.py",
+    "operators.pagerank": "tests/test_pagerank.py",
+    "operators.skew": "tests/test_partitioning.py",
+    "operators.videoops": "tests/test_videoops.py",
+    "streaming.pq_screen": "tests/test_streaming_pq_screen.py",
+    "streaming.winnow_screen": "tests/test_winnow_screen.py",
 }
 
 
@@ -96,7 +113,8 @@ def test_roots_exist():
 
 def test_every_module_is_reached_or_allowlisted():
     modules = _modules()
-    unreached = sorted(set(modules) - _closure(modules) - set(ALLOWLIST))
+    exempt = set(ALLOWLIST) | set(DEFERRED)
+    unreached = sorted(set(modules) - _closure(modules) - exempt)
     assert not unreached, (
         f"modules no entry point imports: {unreached}; wire each from a "
         "root, give it an ALLOWLIST entry with its reason, or delete it"
@@ -106,5 +124,18 @@ def test_every_module_is_reached_or_allowlisted():
 def test_allowlist_is_not_stale():
     modules = _modules()
     reached = _closure(modules)
-    stale = sorted(m for m in ALLOWLIST if m not in modules or m in reached)
+    listed = set(ALLOWLIST) | set(DEFERRED)
+    stale = sorted(m for m in listed if m not in modules or m in reached)
     assert not stale, f"allowlist entries that are reached or missing: {stale}"
+    assert not set(ALLOWLIST) & set(DEFERRED)
+
+
+def test_deferred_modules_keep_their_tests():
+    """A deferred module stays only while a test file still imports it."""
+    root = PKG_DIR.parent
+    untested = sorted(
+        mod
+        for mod, test in DEFERRED.items()
+        if f"{PACKAGE}.{mod} import" not in (root / test).read_text()
+    )
+    assert not untested, f"deferred modules their test no longer imports: {untested}"
