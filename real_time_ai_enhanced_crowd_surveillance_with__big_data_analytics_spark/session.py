@@ -3,7 +3,9 @@
 Local mode here is `local[N]` (single JVM); the conf below is chosen so
 the same code scales to a multi-executor cluster: AQE on (runtime
 coalesce + skew-join handling), Arrow on (pandas-UDF hot paths), UTC
-session timezone (DuckDB-oracle timestamps are UTC-naive).
+session timezone (DuckDB-oracle timestamps are UTC-naive). Under the
+local master, Python workers fork from `worker_daemon`, which stops each
+task from re-reading pyspark.zip (see that module).
 """
 
 from __future__ import annotations
@@ -41,7 +43,15 @@ def get_spark(app_name: str = "crowd_analytics", cpus: int | None = None) -> Spa
         .config("spark.ui.enabled", "false")
     )
     if "SPARK_MASTER" not in os.environ and not os.environ.get("SPARK_CONNECT_MODE_ENABLED"):
-        builder = builder.master(f"local[{cpus}]").config("spark.driver.memory", "90g")
+        # imported here, not at the top: `python -m` runs the daemon after
+        # importing this package, which must not have imported it already
+        from . import worker_daemon
+
+        builder = (
+            builder.master(f"local[{cpus}]")
+            .config("spark.driver.memory", "90g")
+            .config("spark.python.daemon.module", worker_daemon.__name__)
+        )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

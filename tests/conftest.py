@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 import tempfile
@@ -95,6 +96,24 @@ def events_chunk_schema():
             T.StructField("ts", T.TimestampType()),
         ]
     )
+
+
+@contextlib.contextmanager
+def rocksdb_state_store(spark):
+    """Streams started inside the block keep their state in RocksDB;
+    the session's previous state-store provider is restored on exit."""
+    conf = "spark.sql.streaming.stateStore.providerClass"
+    prev = spark.conf.get(conf, None)
+    spark.conf.set(
+        conf, "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    )
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, prev)
 
 
 def write_events_chunk(spark, src: str, name: str, rows) -> None:

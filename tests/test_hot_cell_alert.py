@@ -79,11 +79,6 @@ def test_idle_cell_ttl_bounds_state(spark, sf_dir):
 
 T0 = __import__("datetime").datetime(2024, 1, 1)
 
-_PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
-_ROCKSDB = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
 
 def _chunk_rows(user_id, n, start_eid):
     return [
@@ -145,7 +140,7 @@ def test_rocksdb_alert_ledger_matches_default(spark, tmp_path):
     identically over the same chunked replay."""
     import os
 
-    from conftest import events_chunk_schema, write_events_chunk
+    from conftest import events_chunk_schema, rocksdb_state_store, write_events_chunk
 
     src = str(tmp_path / "src")
     os.makedirs(src)
@@ -179,14 +174,7 @@ def test_rocksdb_alert_ledger_matches_default(spark, tmp_path):
             q.stop()
 
     default = run("hot_alert_hdfs")
-    prev = spark.conf.get(_PROVIDER_CONF, None)
-    spark.conf.set(_PROVIDER_CONF, _ROCKSDB)
-    try:
+    with rocksdb_state_store(spark):
         rocks = run("hot_alert_rocksdb")
-    finally:
-        if prev is None:
-            spark.conf.unset(_PROVIDER_CONF)
-        else:
-            spark.conf.set(_PROVIDER_CONF, prev)
     assert rocks == default
     assert len(default) == 1  # user 7's cell crossed; user 9's never did

@@ -8,6 +8,7 @@ production."""
 from __future__ import annotations
 
 import pytest
+from conftest import rocksdb_state_store
 
 from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.streaming.ab_monitor import (
     streaming_ab_monitor,
@@ -27,11 +28,6 @@ from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.str
 from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.streaming.runner import (
     run_to_memory,
     stream_events,
-)
-
-_PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
-_ROCKSDB = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
 
 _OPS = {
@@ -73,14 +69,7 @@ def test_monitor_output_identical_under_rocksdb(spark, sf_dir, name):
             q.stop()
 
     default = run(f"{name}_default_out")
-    prev = spark.conf.get(_PROVIDER_CONF, None)
-    spark.conf.set(_PROVIDER_CONF, _ROCKSDB)
-    try:
+    with rocksdb_state_store(spark):
         rocks = run(f"{name}_rocksdb_out")
-    finally:
-        if prev is None:
-            spark.conf.unset(_PROVIDER_CONF)
-        else:
-            spark.conf.set(_PROVIDER_CONF, prev)
     assert rocks == default
     assert default, f"{name}: empty output proves nothing"

@@ -18,7 +18,7 @@ from __future__ import annotations
 import datetime as dt
 import os
 
-from conftest import events_chunk_schema, write_events_chunk
+from conftest import events_chunk_schema, rocksdb_state_store, write_events_chunk
 from pyspark.sql import functions as F
 
 from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.operators.detections import (
@@ -33,11 +33,6 @@ from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.str
 )
 from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.streaming.stateful import (
     streaming_rising_edges,
-)
-
-_PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
-_ROCKSDB = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
 
 T0 = dt.datetime(2024, 1, 1)
@@ -99,15 +94,8 @@ def _run(spark, src, pipeline, tmp_path):
         return pipeline(spark, stream, tag, tmp_path)
 
     default = once("hdfs")
-    prev = spark.conf.get(_PROVIDER_CONF, None)
-    spark.conf.set(_PROVIDER_CONF, _ROCKSDB)
-    try:
+    with rocksdb_state_store(spark):
         rocks = once("rocksdb")
-    finally:
-        if prev is None:
-            spark.conf.unset(_PROVIDER_CONF)
-        else:
-            spark.conf.set(_PROVIDER_CONF, prev)
     assert rocks == default
     return rocks
 
