@@ -5,7 +5,8 @@ the same code scales to a multi-executor cluster: AQE on (runtime
 coalesce + skew-join handling), Arrow on (pandas-UDF hot paths), UTC
 session timezone (DuckDB-oracle timestamps are UTC-naive). Under the
 local master, Python workers fork from `worker_daemon`, which stops each
-task from re-reading pyspark.zip (see that module).
+task from re-reading pyspark.zip (see that module), and checkpoints
+commit through the FileSystem manager, whose rename forks no `readlink`.
 """
 
 from __future__ import annotations
@@ -51,6 +52,17 @@ def get_spark(app_name: str = "crowd_analytics", cpus: int | None = None) -> Spa
             builder.master(f"local[{cpus}]")
             .config("spark.driver.memory", "90g")
             .config("spark.python.daemon.module", worker_daemon.__name__)
+            # Spark's default (FileContext) manager checks every rename
+            # with getFileLinkStatus, which without native libhadoop
+            # forks /usr/bin/readlink per path; the FileSystem manager
+            # renames with the same no-overwrite check and layout.
+            # Cluster sessions keep the default: HDFS needs its atomic
+            # no-overwrite rename.
+            .config(
+                "spark.sql.streaming.checkpointFileManagerClass",
+                "org.apache.spark.sql.execution.streaming.checkpointing."
+                "FileSystemBasedCheckpointFileManager",
+            )
         )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -9,10 +9,12 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# streaming tests are dominated by checkpoint-log fsyncs (offset/commit
-# logs + state-store delta files, hundreds of tiny writes per test);
-# /tmp is disk-backed here, so point pytest's tmp factory at tmpfs when
-# available — purely a test-harness I/O change, no product behavior
+# streaming tests write hundreds of tiny checkpoint files each (offset/
+# commit logs + state-store delta files); without native libhadoop the
+# JVM forks a `chmod` per created file or directory, and Spark's default
+# checkpoint manager a `readlink` per rename path (get_spark picks the
+# manager that does not). Pointing pytest's tmp factory at tmpfs when
+# available is purely a test-harness I/O change, no product behavior
 if os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK):
     _shm_tmp = "/dev/shm/spark_graft_pytest_tmp"
     os.makedirs(_shm_tmp, exist_ok=True)

@@ -6,12 +6,19 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
+from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.operators.detections import (
+    CROWD_THRESHOLD,
+)
 from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.operators.nms import (
     FIRE_IOU,
     PERSON_IOU,
     _iou,
     nms,
     nms_pandas,
+)
+from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.streaming.pipeline import (
+    _BOX_COLS,
+    _crowd_fn,
 )
 
 import numpy as np
@@ -107,3 +114,81 @@ def test_nms_distributed_matches_local(spark):
         .reset_index(drop=True)
     )
     pd.testing.assert_frame_equal(got, want)
+
+
+class _StubState:
+    """The slice of ``GroupState`` the streaming crowd kernel touches."""
+
+    hasTimedOut = False
+
+    def __init__(self, value=None):
+        self.value = value
+        self.timeout_ms = None
+
+    @property
+    def exists(self):
+        return self.value is not None
+
+    @property
+    def get(self):
+        return self.value
+
+    def update(self, value):
+        self.value = value
+
+    def getCurrentWatermarkMs(self):
+        return 0
+
+    def setTimeoutTimestamp(self, ts_ms):
+        self.timeout_ms = ts_ms
+
+
+def test_streaming_crowd_kernel_matches_nms_pandas():
+    """``_crowd_fn`` counts a frame's persons as ``nms_pandas`` does on
+    the frame's boxes in event_id order, whether the boxes arrive in
+    one batch or partly from the state store; confidences are drawn
+    from four values so ties (broken by event_id) are common."""
+    fn = _crowd_fn(1_000)
+    rng = np.random.default_rng(11)
+    for frame_id in range(300):
+        n = int(rng.integers(1, 21))
+        frame = pd.DataFrame(
+            {
+                "event_id": rng.permutation(1_000)[:n],
+                "confidence": rng.choice([0.55, 0.7, 0.85, 0.9], n),
+                "x": rng.integers(0, 60, n),
+                "y": rng.integers(0, 60, n),
+                "w": rng.integers(10, 40, n),
+                "h": rng.integers(10, 40, n),
+                "ts": pd.to_datetime(rng.integers(1, 10**6, n), unit="ms"),
+            }
+        )
+        want = len(
+            nms_pandas(frame.sort_values("event_id", ignore_index=True), PERSON_IOU)
+        )
+        split = int(rng.integers(0, n + 1))
+        if frame_id % 2:
+            # existing state holds the first `split` boxes, the batch the rest
+            stored = frame.iloc[:split]
+            state = _StubState(
+                (*(stored[c].tolist() for c in _BOX_COLS), int(rng.integers(0, 10**6)))
+            )
+            batch = [frame.iloc[split:]]
+        else:
+            state = _StubState()
+            batch = [frame.iloc[:split], frame.iloc[split:]]
+        before_ts = state.value[-1] if state.exists else 0
+        (out,) = fn((7, frame_id), iter(batch), state)
+        assert out.to_dict("records") == [
+            {
+                "camera_id": 7,
+                "frame_id": frame_id,
+                "n_persons": want,
+                "crowded": want > CROWD_THRESHOLD,
+            }
+        ]
+        # the state now holds every box of the frame, in arrival order
+        assert state.value[:-1] == tuple(frame[c].tolist() for c in _BOX_COLS)
+        batch_ts = [int(p["ts"].max().value // 1_000_000) for p in batch if len(p)]
+        newest = max([before_ts, *batch_ts])
+        assert state.value[-1] == newest and state.timeout_ms == newest + 1_000
