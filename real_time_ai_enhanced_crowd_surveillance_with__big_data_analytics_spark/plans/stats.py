@@ -304,8 +304,8 @@ def key_skew_report(spark: SparkSession, sf: str) -> DataFrame:
     """Shuffle-key skew diagnostic for the events fact: the SKEW_TOP
     heaviest user_id keys with their share of all rows and the
     cumulative share — the number that decides whether a planned
-    user-keyed join/agg needs salting (operators/skew.py) or AQE skew
-    handling before it runs at 100 TB.
+    user-keyed join/agg leans on AQE skew-join splitting (on in
+    ``get_spark``) before it runs at 100 TB.
 
     Key-cardinality shuffle (map-side combined), then the top-SKEW_TOP
     cut happens FIRST via ``orderBy().limit()`` — planned as

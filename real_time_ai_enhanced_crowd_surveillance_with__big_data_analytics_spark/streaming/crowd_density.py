@@ -51,55 +51,36 @@ def streaming_crowd_density(
     late-data bound; state stays (windows in flight) x (<= 400 cells)
     either way.
     """
-    x, y = _coords(F.col("user_id"))
-    cents = F.round(F.col("value") * 100).cast("long")
-    return (
-        events.select(
-            "ts",
-            "event_type",
-            _cell(x, HOT_CELL).alias("cell_x"),
-            _cell(y, HOT_CELL).alias("cell_y"),
-            cents.alias("cents"),
-        )
-        .withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("win"), "cell_x", "cell_y")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum("cents").alias("value_cents"),
-            F.count_if(F.col("event_type") == "error").alias("n_errors"),
-        )
-        .select(
-            F.date_format(F.col("win.start"), "yyyy-MM-dd HH:mm:ss").alias(
-                "win_start"
-            ),
-            "cell_x",
-            "cell_y",
-            "n_events",
-            "value_cents",
-            "n_errors",
-            (F.col("n_events") >= hot_min).alias("hot"),
-        )
-    )
+    return _density(events, window, hot_min, watermark)
 
 
 def batch_crowd_density(
     events: DataFrame, window: str = "1 day", hot_min: int = STREAM_HOT_MIN
 ) -> DataFrame:
-    """The batch evaluation of the identical plan — same F.window
-    grouping, same mapping columns — used by the parity test and by
-    backfills (one code path, two execution modes is the point of
-    Structured Streaming)."""
+    """The batch evaluation of the same plan, without the watermark —
+    used by the parity test and by backfills (one code path, two
+    execution modes is the point of Structured Streaming)."""
+    return _density(events, window, hot_min)
+
+
+def _density(
+    events: DataFrame, window: str, hot_min: int, watermark: str | None = None
+) -> DataFrame:
+    """The density plan; a watermark, when given, goes between the
+    projection and the windowed aggregate."""
     x, y = _coords(F.col("user_id"))
     cents = F.round(F.col("value") * 100).cast("long")
+    cells = events.select(
+        "ts",
+        "event_type",
+        _cell(x, HOT_CELL).alias("cell_x"),
+        _cell(y, HOT_CELL).alias("cell_y"),
+        cents.alias("cents"),
+    )
+    if watermark is not None:
+        cells = cells.withWatermark("ts", watermark)
     return (
-        events.select(
-            "ts",
-            "event_type",
-            _cell(x, HOT_CELL).alias("cell_x"),
-            _cell(y, HOT_CELL).alias("cell_y"),
-            cents.alias("cents"),
-        )
-        .groupBy(F.window("ts", window).alias("win"), "cell_x", "cell_y")
+        cells.groupBy(F.window("ts", window).alias("win"), "cell_x", "cell_y")
         .agg(
             F.count("*").alias("n_events"),
             F.sum("cents").alias("value_cents"),

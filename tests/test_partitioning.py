@@ -1,28 +1,14 @@
-"""Partitioning-strategy tests: salted join equivalence, bucketed
-co-located join without shuffle (SURVEY.md 'Partitioning & shuffle')."""
+"""Partitioning-strategy tests: a runtime bloom filter prunes the probe
+side of a selective join, and a bucketed co-located join runs without a
+shuffle (SURVEY.md 'Partitioning & shuffle')."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.operators.skew import (
-    salted_join,
-)
 from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.sources.tables import (
     load_table,
 )
-
-
-def test_salted_join_equals_plain_join(spark, sf_dir):
-    events = load_table(spark, "events", sf_dir)
-    customer = load_table(spark, "customer", sf_dir).select(
-        F.col("c_custkey").alias("user_id"), "c_mktsegment"
-    )
-    plain = events.join(customer, "user_id").select("event_id", "c_mktsegment")
-    salted = salted_join(events, customer, "user_id", salt_buckets=8).select(
-        "event_id", "c_mktsegment"
-    )
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
 
 
 def test_runtime_bloom_filter_prunes_probe_side(spark, sf_dir):

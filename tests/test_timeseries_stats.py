@@ -10,6 +10,7 @@ from collections import defaultdict
 import pytest
 
 from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.plans.similarity import (
+    _cosine_assign,
     kmeans_refine,
     nearest_centroid,
 )
@@ -153,3 +154,23 @@ def test_kmeans_refine_counts_match_nearest_centroid(spark, sf_dir):
     assert label_n == dict(assigns)
     dims = {frozenset(v) for v in dim_counts.values()}
     assert len(dims) == 1 and len(next(iter(dims))) > 0
+
+
+def test_zero_vector_cosine_is_nan_and_takes_first_label():
+    """A zero vector's cosine is 0/0: NaN, which mapInPandas emits as
+    null (what the DuckDB oracles return), not a guarded 0.0. Its
+    assignment is the first label, since argmax takes the first NaN."""
+    from types import SimpleNamespace
+
+    import numpy as np
+    import pandas as pd
+
+    labs = np.array([5, 9])
+    cmat = np.array([[1.0, 0.0, 0.0], [0.0, 1.0, 0.0]])
+    bc = SimpleNamespace(value=(labs, cmat, np.linalg.norm(cmat, axis=1)))
+    pdf = pd.DataFrame({"embedding": [[0.0, 0.0, 0.0], [0.0, 2.0, 0.0]]})
+    with np.errstate(invalid="ignore"):  # the 0/0 under test
+        labs_b, best, sims = _cosine_assign(bc, pdf)
+    assert np.isnan(sims[0]).all()
+    assert sims[1].tolist() == [0.0, 1.0]
+    assert labs_b[best].tolist() == [5, 9]

@@ -10,6 +10,10 @@ Pins the algorithm's published guarantees on crafted documents:
    every window, pinning the (hash, position) packing order;
 4. short docs (< W grams) yield exactly one fingerprint;
 5. noise threshold — docs with no common K-gram share no fingerprint.
+
+It also pins the batch Column pipeline position-for-position against
+``winnow_positions``, an independent plain-Python statement of the same
+selection rule, on the real documents table.
 """
 
 from __future__ import annotations
@@ -17,10 +21,51 @@ from __future__ import annotations
 import pytest
 
 from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.plans.dedup import (
+    HASH_BASE,
+    HASH_MOD,
     WINNOW_K,
     WINNOW_W,
     _winnow_selected,
 )
+from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.sources.tables import (
+    load_table,
+)
+
+
+def winnow_positions(text: str) -> list[tuple[int, int]]:
+    """The batch selection rule in plain Python: K-gram polynomial
+    hashes, rightmost-min of every W-window (full windows at gram
+    i ≥ W, plus the single partial window for docs shorter than W
+    grams). Returns sorted distinct (pos, fp_hash), 1-based positions.
+
+    Rolling evaluation: the polynomial hash of each gram is computed
+    incrementally (subtract the leading char's base^(K-1) term, shift,
+    add), so a document costs O(chars), not O(chars·K)."""
+    n = len(text)
+    n_grams = n - WINNOW_K + 1
+    if n_grams <= 0:
+        return []
+    lead = pow(HASH_BASE, WINNOW_K - 1, HASH_MOD)
+    h = 0
+    for ch in text[:WINNOW_K]:
+        h = (h * HASH_BASE + ord(ch)) % HASH_MOD
+    hashes = [h]
+    for i in range(1, n_grams):
+        h = (
+            (h - ord(text[i - 1]) * lead) * HASH_BASE + ord(text[i + WINNOW_K - 1])
+        ) % HASH_MOD
+        hashes.append(h)
+    selected: set[tuple[int, int]] = set()
+    first_end = min(WINNOW_W, n_grams)  # 1-based gram index of first window end
+    for end in range(first_end, n_grams + 1):
+        lo = max(0, end - WINNOW_W)
+        # rightmost min of hashes[lo:end] (0-based slice; gram i = idx+1)
+        best_idx, best_h = lo, hashes[lo]
+        for j in range(lo + 1, end):
+            if hashes[j] <= best_h:
+                best_idx, best_h = j, hashes[j]
+        selected.add((best_idx + 1, best_h))
+    return sorted(selected)
 
 
 def _select(spark, docs: dict[int, str]):
@@ -105,3 +150,26 @@ def test_positions_are_valid_gram_offsets(spark):
     for p, h in sel[1]:
         assert 1 <= p <= n_grams
         assert h >= 0
+
+
+def test_python_kernel_matches_batch_column_pipeline(spark, sf_dir):
+    docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
+    got = {}
+    for r in _winnow_selected(docs).collect():
+        got.setdefault(r["doc_id"], set()).add((r["pos"], r["fp_hash"]))
+    texts = {r["doc_id"]: r["text"] for r in docs.collect()}
+    assert len(texts) > 10
+    for doc_id, text in texts.items():
+        want = set(winnow_positions(text))
+        assert got.get(doc_id, set()) == want, doc_id
+
+
+def test_kernel_edge_cases():
+    # below the noise threshold: no grams
+    assert winnow_positions("abc") == []
+    # single gram: one window, one pick
+    assert len(winnow_positions("abcdefgh")) == 1
+    # uniform text: rightmost tie-break selects every full-window end
+    sel = winnow_positions("a" * 20)
+    n_grams = 20 - 8 + 1
+    assert [p for p, _ in sel] == list(range(4, n_grams + 1))
