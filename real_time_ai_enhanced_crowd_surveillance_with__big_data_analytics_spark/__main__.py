@@ -18,13 +18,6 @@ import argparse
 import sys
 
 
-def _tables():
-    return (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings"
-    ).split()
-
-
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="crowdlytics")
     sub = p.add_subparsers(dest="cmd", required=True)
@@ -53,10 +46,9 @@ def main(argv: list[str] | None = None) -> int:
 
     spark = get_spark("cli")
     if args.cmd == "sql":
-        from .sources.tables import load_table
+        from .sources.tables import register_views
 
-        for t in _tables():
-            load_table(spark, t, args.sf).createOrReplaceTempView(t)
+        register_views(spark, args.sf)
         spark.sql(args.statement).show(args.n, truncate=False)
         return 0
 

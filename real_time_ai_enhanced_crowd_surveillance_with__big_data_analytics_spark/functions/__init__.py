@@ -1,4 +1,3 @@
-from .arrays import cosine_sim, dot, l2_norm, l2_normalize, softmax  # noqa: F401
 from .validators import (  # noqa: F401
     valid_contact,
     valid_name,

@@ -1,49 +1,17 @@
-"""Vector math as JVM-side array expressions (SURVEY.md A5-A7).
+"""Vectorized pairwise cosine over joined vector columns (SURVEY.md
+A6: the reference's CLIP similarity, main.py:79).
 
-Reference semantics: CLIP embedding pipeline — L2-normalize
-(main.py:38,78), dot-product similarity ×100 (main.py:79), softmax
-(main.py:79), top-k (main.py:80-81). All expressed with
-``transform``/``zip_with``/``aggregate`` so they run inside codegen —
-no Python UDF in the hot path; at 100 TB this is the difference between
-an Arrow round-trip per row and pure Tungsten evaluation.
-
-Everything computes in DOUBLE (cast once) for DuckDB-oracle float
-parity (SURVEY.md §7.4).
+The registry's exact nearest-neighbour queries (``plans/similarity.py``)
+compute cosine as one numpy einsum per Arrow batch. Its 6-decimal
+rounding keeps parity with the DuckDB oracles' DOUBLE arithmetic
+(SURVEY.md §7.4).
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def _as_double(v: Column) -> Column:
-    return v.cast("array<double>")
-
-
-def dot(a: Column, b: Column) -> Column:
-    """Sequential-fold dot product (matches DuckDB list_dot_product)."""
-    return F.aggregate(
-        F.zip_with(_as_double(a), _as_double(b), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def l2_norm(v: Column) -> Column:
-    return F.sqrt(dot(v, v))
-
-
-def l2_normalize(v: Column) -> Column:
-    """x / ||x|| (reference main.py:38: x /= x.norm(dim=-1))."""
-    n = l2_norm(v)
-    return F.transform(_as_double(v), lambda x: x / n)
-
-
-def cosine_sim(a: Column, b: Column) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
 def pair_cosine_udf():
@@ -65,14 +33,3 @@ def pair_cosine_udf():
         return pd.Series(np.round(num / den, 6))
 
     return _cos
-
-
-def softmax(v: Column) -> Column:
-    """Numerically-stable softmax over an array column (reference
-    main.py:79: .softmax(dim=-1)). Max-subtraction matches torch's
-    stable formulation."""
-    d = _as_double(v)
-    m = F.array_max(d)
-    exps = F.transform(d, lambda x: F.exp(x - m))
-    s = F.aggregate(exps, F.lit(0.0), lambda acc, x: acc + x)
-    return F.transform(exps, lambda x: x / s)

@@ -1,17 +1,13 @@
-"""Pure-stdlib WAV codec + numpy audio features — the audio arm of the
-multimodal column conventions (SURVEY.md §1.2; BASELINE.json
-'image/audio/video as opaque binary columns').
+"""Pure-stdlib WAV codec — the audio arm of the multimodal column
+conventions (SURVEY.md §1.2; BASELINE.json 'image/audio/video as
+opaque binary columns').
 
-Same design as the image codecs (imagecodec.py r5, jpegcodec.py r6):
-the decode step is REAL with zero external deps for the formats a
-controlled pipeline emits — WAV/RIFF PCM (8/16/24/32-bit int, 32-bit
-float) — while compressed formats (MP3/AAC/Opus) stay behind a native
-gate, and ``decode_audio`` degrades to a deterministic byte-derived
-fake so the Spark seam is total. Feature extraction (RMS energy,
-zero-crossing rate, spectral centroid/rolloff via rfft) is plain
-numpy over the decoded samples and runs inside Arrow-batched
-mapInPandas workers — one call per clip, the same at-scale shape as
-the image feature path.
+Decode is real with zero external deps for the formats a controlled
+pipeline emits — WAV/RIFF PCM (8/16/24/32-bit int, 32-bit float).
+Every other WAV format (compressed or perceptual: G.711, ADPCM, MP3,
+AAC, Opus) raises ValueError; those need a native decoder. The
+registry's ``audio_pcm_features`` (plans/codec_parity.py) runs the
+PCM16 round trip through this module.
 
 ValueError contract: malformed buffers raise ValueError only (never
 struct/index errors), pinned by the corruption fuzz test, so a corrupt
@@ -33,7 +29,7 @@ MAX_SAMPLES = 1 << 28  # ~268M samples (~100 min at 44.1 kHz): past this
 def decode_wav(buf: bytes) -> tuple[np.ndarray, int]:
     """WAV bytes → (float64 samples in [-1, 1] shaped (n, channels),
     sample_rate). PCM 8 (unsigned) / 16 / 24 / 32-bit and IEEE
-    float32; raises ValueError for compressed/extensible-only forms."""
+    float32; raises ValueError for every other format."""
     try:
         return _decode_wav_inner(buf)
     except ValueError:
@@ -92,19 +88,6 @@ def _decode_wav_inner(buf: bytes) -> tuple[np.ndarray, int]:
         if bits != 32:
             raise ValueError(f"unsupported WAV float bit depth {bits}")
         x = np.frombuffer(data, dtype="<f4").astype(np.float64)
-    elif audio_fmt in (6, 7):  # G.711 A-law / mu-law (8-bit, pure-int spec)
-        if bits != 8:
-            raise ValueError(f"unsupported G.711 bit depth {bits}")
-        codes = np.frombuffer(data, dtype=np.uint8)
-        pcm = (_ALAW_TABLE if audio_fmt == 6 else _ULAW_TABLE)[codes]
-        x = pcm.astype(np.float64) / 32768.0
-    elif audio_fmt == 0x11:  # IMA/DVI ADPCM (4-bit, pure-int spec)
-        if bits != 4:
-            raise ValueError(f"unsupported IMA ADPCM bit depth {bits}")
-        pcm = _decode_ima_adpcm(data, channels, _block)
-        if pcm.size > MAX_SAMPLES:
-            raise ValueError("WAV clip exceeds the decode sample cap")
-        return pcm.astype(np.float64) / 32768.0, rate
     else:
         raise ValueError(f"unsupported WAV audio format {audio_fmt} "
                          "(perceptual codecs need a native decoder)")
@@ -112,239 +95,6 @@ def _decode_wav_inner(buf: bytes) -> tuple[np.ndarray, int]:
     if n > MAX_SAMPLES:
         raise ValueError("WAV clip exceeds the decode sample cap")
     return x[:n].reshape(-1, channels), rate
-
-
-# --- G.711 mu-law / A-law (WAV formats 7 / 6) ---------------------------------
-#
-# The telephony companding pair, ITU-T G.711: pure 8-bit integer
-# logarithmic PCM, expanded through the canonical segment/mantissa
-# formulas (public spec; the constants 0x84/0x55/0x108 are the
-# standard bias, A-law toggle mask, and segment offset). Decode is a
-# 256-entry table lookup — exact, zero-dependency — moving WAV fmt 6/7
-# from "unsupported" to owned, the ADPCM/JPEG promotion pattern.
-
-
-def _ulaw_expand(u: int) -> int:
-    u = ~u & 0xFF
-    t = ((u & 0x0F) << 3) + 0x84
-    t <<= (u >> 4) & 0x07
-    return 0x84 - t if u & 0x80 else t - 0x84
-
-
-def _alaw_expand(a: int) -> int:
-    a ^= 0x55
-    t = (a & 0x0F) << 4
-    seg = (a & 0x70) >> 4
-    if seg == 0:
-        t += 8
-    elif seg == 1:
-        t += 0x108
-    else:
-        t = (t + 0x108) << (seg - 1)
-    return t if a & 0x80 else -t
-
-
-_ULAW_TABLE = np.array([_ulaw_expand(c) for c in range(256)], dtype=np.int16)
-_ALAW_TABLE = np.array([_alaw_expand(c) for c in range(256)], dtype=np.int16)
-
-
-def _compress_g711(pcm: np.ndarray, law: str) -> np.ndarray:
-    """int16 → G.711 code bytes (encoder twin for round-trip tests and
-    pipeline sinks): pick the nearest segment/mantissa by the standard
-    search over the decode lattice — bit-exact with the tables above by
-    construction."""
-    table = _ULAW_TABLE if law == "u" else _ALAW_TABLE
-    order = np.argsort(table, kind="stable")
-    sorted_vals = table[order].astype(np.int32)
-    idx = np.searchsorted(sorted_vals, pcm.astype(np.int32))
-    idx = np.clip(idx, 0, 255)
-    lo = np.clip(idx - 1, 0, 255)
-    pick = np.where(
-        np.abs(sorted_vals[idx] - pcm) <= np.abs(sorted_vals[lo] - pcm),
-        idx,
-        lo,
-    )
-    return order[pick].astype(np.uint8)
-
-
-def encode_wav_g711(samples: np.ndarray, rate: int, law: str = "u") -> bytes:
-    """(n,) or (n, ch) float in [-1, 1] → G.711 WAV bytes (fmt 7 mu-law
-    or 6 A-law)."""
-    if law not in ("u", "a"):
-        raise ValueError("law must be 'u' or 'a'")
-    if samples.ndim == 1:
-        samples = samples[:, None]
-    channels = samples.shape[1]
-    pcm = np.clip(
-        np.floor(samples * 32768.0 + 0.5), -32768, 32767
-    ).astype(np.int16)
-    payload = _compress_g711(pcm.reshape(-1), law).tobytes()
-    fmt_code = 7 if law == "u" else 6
-    hdr = b"fmt " + struct.pack(
-        "<IHHIIHH", 16, fmt_code, channels, rate,
-        rate * channels, channels, 8,
-    )
-    data = b"data" + struct.pack("<I", len(payload)) + payload
-    if len(payload) & 1:
-        data += b"\x00"
-    body = WAVE_MAGIC + hdr + data
-    return RIFF_MAGIC + struct.pack("<I", len(body)) + body
-
-
-# --- IMA/DVI ADPCM (WAV format 0x11) -----------------------------------------
-#
-# The one COMPRESSED WAV format a zero-dependency pipeline can own: the
-# IMA Digital Audio Compression spec is pure 16-bit integer arithmetic
-# (4:1 compression, 4-bit nibbles against an 89-entry step table), so
-# decode is exact and portable — no libm, no native codec, no float in
-# the reconstruction loop. Perceptual codecs (MP3/AAC/Opus) stay behind
-# the native gate; ADPCM moves from "gated" to "owned", the same
-# promotion baseline JPEG got in r6. Tables are public spec constants.
-#
-# Block layout (Microsoft WAVE mapping of IMA ADPCM): per block, one
-# 4-byte header per channel (int16 first sample, uint8 step index,
-# reserved), then 4-byte nibble groups round-robin across channels
-# (8 nibbles per group, low nibble first). The nibble recurrence is
-# serial by construction — the per-clip Python loop is the honest cost,
-# bounded by the same MAX_SAMPLES cap as PCM (clips are KB-to-MB cells;
-# parallelism comes from many clips per Arrow batch, not within one).
-
-_IMA_STEPS = np.array([
-    7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31, 34, 37,
-    41, 45, 50, 55, 60, 66, 73, 80, 88, 97, 107, 118, 130, 143, 157, 173,
-    190, 209, 230, 253, 279, 307, 337, 371, 408, 449, 494, 544, 598, 658,
-    724, 796, 876, 963, 1060, 1166, 1282, 1411, 1552, 1707, 1878, 2066,
-    2272, 2499, 2749, 3024, 3327, 3660, 4026, 4428, 4871, 5358, 5894,
-    6484, 7132, 7845, 8630, 9493, 10442, 11487, 12635, 13899, 15289,
-    16818, 18500, 20350, 22385, 24623, 27086, 29794, 32767,
-], dtype=np.int64)
-_IMA_INDEX_ADJ = (-1, -1, -1, -1, 2, 4, 6, 8)
-
-
-def _ima_step(pred: int, index: int, nibble: int) -> tuple[int, int]:
-    """One IMA ADPCM reconstruction step: (pred, index, nibble) →
-    (pred', index'). Shared verbatim by decoder and encoder (the
-    encoder must track the DECODER's reconstruction or the streams
-    drift)."""
-    step = int(_IMA_STEPS[index])
-    diff = step >> 3
-    if nibble & 1:
-        diff += step >> 2
-    if nibble & 2:
-        diff += step >> 1
-    if nibble & 4:
-        diff += step
-    if nibble & 8:
-        diff = -diff
-    pred = max(-32768, min(32767, pred + diff))
-    index = max(0, min(88, index + _IMA_INDEX_ADJ[nibble & 7]))
-    return pred, index
-
-
-def _decode_ima_adpcm(data: bytes, channels: int, block_align: int) -> np.ndarray:
-    """IMA ADPCM payload → int16 samples shaped (n, channels)."""
-    hdr = 4 * channels
-    if block_align < hdr or (block_align - hdr) % (4 * channels):
-        raise ValueError(f"bad IMA ADPCM block align {block_align}")
-    out: list[list[int]] = [[] for _ in range(channels)]
-    for base in range(0, len(data) - hdr + 1, block_align):
-        block = data[base : base + block_align]
-        preds, idxs = [], []
-        for c in range(channels):
-            pred = int.from_bytes(
-                block[4 * c : 4 * c + 2], "little", signed=True
-            )
-            index = block[4 * c + 2]
-            if index > 88:
-                raise ValueError(f"IMA ADPCM step index {index} > 88")
-            preds.append(pred)
-            idxs.append(index)
-            out[c].append(pred)  # the header sample is sample 0
-        # nibble groups: 4 bytes per channel, round-robin
-        for g in range(hdr, len(block) - 4 * channels + 1, 4 * channels):
-            for c in range(channels):
-                for b in block[g + 4 * c : g + 4 * c + 4]:
-                    for nib in (b & 0x0F, b >> 4):
-                        preds[c], idxs[c] = _ima_step(preds[c], idxs[c], nib)
-                        out[c].append(preds[c])
-    if not out[0]:
-        raise ValueError("IMA ADPCM payload shorter than one block header")
-    n = min(len(ch) for ch in out)
-    return np.stack(
-        [np.asarray(ch[:n], dtype=np.int16) for ch in out], axis=1
-    )
-
-
-def encode_ima_adpcm(
-    samples: np.ndarray, rate: int, samples_per_block: int = 505
-) -> bytes:
-    """(n, channels) float in [-1, 1] → WAV bytes (format 0x11).
-    Round-trip partner and test oracle: decode(encode(x)) equals the
-    encoder's own reconstruction track bit-for-bit. The final partial
-    block pads by repeating the last sample (a ``fact`` chunk records
-    the true frame count for players that honor it; our decoder is
-    deterministic from the payload alone)."""
-    if (samples_per_block - 1) % 8:
-        raise ValueError("samples_per_block must be 1 + multiple of 8")
-    if samples.ndim == 1:
-        samples = samples[:, None]
-    n, channels = samples.shape
-    if n == 0:
-        raise ValueError("cannot encode an empty clip")
-    pcm = np.clip(
-        np.floor(samples * 32768.0 + 0.5), -32768, 32767
-    ).astype(np.int64)
-    pad = (-n) % samples_per_block or 0
-    if pad:
-        pcm = np.concatenate([pcm, np.repeat(pcm[-1:], pad, axis=0)])
-    block_align = 4 * channels + (samples_per_block - 1) // 8 * 4 * channels
-    idxs = [0] * channels
-    blocks = []
-    for base in range(0, len(pcm), samples_per_block):
-        chunk = pcm[base : base + samples_per_block]
-        preds = [int(chunk[0, c]) for c in range(channels)]
-        head = b"".join(
-            struct.pack("<hBB", preds[c], idxs[c], 0)
-            for c in range(channels)
-        )
-        nibs: list[list[int]] = [[] for _ in range(channels)]
-        for s in range(1, samples_per_block):
-            for c in range(channels):
-                step = int(_IMA_STEPS[idxs[c]])
-                delta = int(chunk[s, c]) - preds[c]
-                nib = 0
-                if delta < 0:
-                    nib = 8
-                    delta = -delta
-                if delta >= step:
-                    nib |= 4
-                    delta -= step
-                if delta >= step >> 1:
-                    nib |= 2
-                    delta -= step >> 1
-                if delta >= step >> 2:
-                    nib |= 1
-                preds[c], idxs[c] = _ima_step(preds[c], idxs[c], nib)
-                nibs[c].append(nib)
-        body = bytearray()
-        for g in range(0, samples_per_block - 1, 8):
-            for c in range(channels):
-                eight = nibs[c][g : g + 8]
-                for k in range(0, 8, 2):
-                    body.append(eight[k] | (eight[k + 1] << 4))
-        blocks.append(head + bytes(body))
-    payload = b"".join(blocks)
-    fmt = b"fmt " + struct.pack(
-        "<IHHIIHHHH", 20, 0x11, channels, rate,
-        rate * block_align // samples_per_block or rate, block_align, 4,
-        2, samples_per_block,
-    )
-    fact = b"fact" + struct.pack("<II", 4, n)
-    data = b"data" + struct.pack("<I", len(payload)) + payload
-    if len(payload) & 1:
-        data += b"\x00"
-    body_all = WAVE_MAGIC + fmt + fact + data
-    return RIFF_MAGIC + struct.pack("<I", len(body_all)) + body_all
 
 
 def encode_wav(samples: np.ndarray, rate: int, bits: int = 16) -> bytes:
@@ -372,84 +122,3 @@ def encode_wav(samples: np.ndarray, rate: int, bits: int = 16) -> bytes:
     body = WAVE_MAGIC + hdr + data
     return RIFF_MAGIC + struct.pack("<I", len(body)) + body
 
-
-# --- features -----------------------------------------------------------------
-
-N_AUDIO_FEATURES = 6
-
-
-def audio_features(x: np.ndarray, rate: int) -> dict[str, float]:
-    """Clip-level descriptors over the mono mix: duration, RMS energy,
-    peak, zero-crossing rate (Hz), spectral centroid and 85% rolloff
-    (Hz, via rfft power spectrum). Deterministic pure numpy."""
-    mono = x.mean(axis=1) if x.ndim == 2 else x
-    n = len(mono)
-    if n == 0:
-        return {
-            "duration_s": 0.0, "rms": 0.0, "peak": 0.0,
-            "zcr_hz": 0.0, "centroid_hz": 0.0, "rolloff_hz": 0.0,
-        }
-    rms = float(np.sqrt(np.mean(mono**2)))
-    peak = float(np.abs(mono).max())
-    crossings = int(np.count_nonzero(np.signbit(mono[1:]) != np.signbit(mono[:-1])))
-    zcr = crossings / 2.0 * rate / max(1, n - 1)
-    spec = np.abs(np.fft.rfft(mono)) ** 2
-    freqs = np.fft.rfftfreq(n, d=1.0 / rate)
-    total = spec.sum()
-    if total > 0:
-        centroid = float((freqs * spec).sum() / total)
-        cum = np.cumsum(spec)
-        rolloff = float(freqs[int(np.searchsorted(cum, 0.85 * total))])
-    else:
-        centroid = rolloff = 0.0
-    return {
-        "duration_s": round(n / rate, 6),
-        "rms": round(rms, 6),
-        "peak": round(peak, 6),
-        "zcr_hz": round(zcr, 6),
-        "centroid_hz": round(centroid, 6),
-        "rolloff_hz": round(rolloff, 6),
-    }
-
-
-def decode_audio(buf: bytes) -> tuple[np.ndarray, int]:
-    """Total decode seam (the audio twin of decode_image): real WAV
-    decode when the magic matches and parses; deterministic byte-
-    derived fake otherwise — bytes as centered int8 samples at 8 kHz —
-    so the Spark batch path never dies on a bad clip."""
-    try:
-        return _decode_wav_inner(buf)
-    except (ValueError, struct.error, IndexError):
-        arr = np.frombuffer(buf[:8000], dtype=np.uint8).astype(np.float64)
-        return ((arr - 128.0) / 128.0)[:, None], 8000
-
-
-def audio_feature_scan(df):
-    """Distributed clip-feature extraction over (doc_id, payload)
-    binary columns — Arrow-batched mapInPandas, one row per clip, zero
-    shuffle; the drop-in slot for a real embedding model
-    (predict_batch_udf) at 100 TB."""
-    import pandas as pd
-
-    def scan(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, buf in zip(pdf["doc_id"], pdf["payload"]):
-                x, rate = decode_audio(bytes(buf))
-                f = audio_features(x, rate)
-                rows.append((int(doc_id), rate, *f.values()))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "sample_rate", "duration_s", "rms", "peak",
-                    "zcr_hz", "centroid_hz", "rolloff_hz",
-                ],
-            )
-
-    return df.mapInPandas(
-        scan,
-        schema=(
-            "doc_id long, sample_rate int, duration_s double, rms double, "
-            "peak double, zcr_hz double, centroid_hz double, rolloff_hz double"
-        ),
-    )

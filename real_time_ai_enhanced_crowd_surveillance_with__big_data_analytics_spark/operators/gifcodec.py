@@ -1,7 +1,7 @@
 """From-scratch GIF codec (GIF87a/89a): LZW decompression, global and
 local palettes, interlacing — zero dependencies, pure integer spec
 (CompuServe GIF89a specification, public).  Completes the lossless
-trio next to PNG/BMP (operators/imagecodec.py) for the reference's
+pair next to PNG (operators/imagecodec.py) for the reference's
 frame-decode path (main.py:129-171): the container formats a crawl or
 camera pipeline actually meets.
 

@@ -1,16 +1,12 @@
-"""Pure-stdlib image codecs: PNG (zlib + numpy unfiltering) and BMP.
+"""Pure-stdlib PNG codec (zlib + numpy unfiltering) and the magic-byte
+sniffer that ``decode_image`` (operators/multimodal.py) routes by.
 
 The container deliberately ships no cv2/PIL, but byte→pixel decode
-does not actually require them for the formats a controlled pipeline
-emits: PNG is zlib (stdlib) + five scanline filters, BMP is a header
-and a pixel array. Implementing both here makes the multimodal decode
-step REAL for those formats — ``decode_image`` (operators/
-multimodal.py) sniffs magic bytes and routes here before falling back
-to its deterministic stub. r6 extends the family with a from-scratch
-baseline JPEG codec (operators/jpegcodec.py); r7 adds progressive
-(SOF2) decode to it; only genuinely exotic corners (arithmetic
-coding, 12-bit precision, lossless/hierarchical) remain behind the
-cv2/PIL gate.
+does not need them for the formats the registry's codec-parity plans
+emit: PNG is zlib (stdlib) + five scanline filters; GIF and TIFF have
+their own modules (gifcodec.py, tiffcodec.py). Any other format — JPEG
+and BMP included — has no decoder here and falls to the deterministic
+stub, unless cv2/PIL are installed.
 
 Decoders return uint8 BGR (cv2 convention, matching the reference's
 frames at main.py:143-149) so every downstream operator
@@ -23,14 +19,12 @@ filters 3/4 (Average/Paeth) are inherently sequential in x — each
 pixel depends on the RECONSTRUCTED left neighbour — so they run as
 Python-int loops over row lists (measured ~10x faster than per-pixel
 numpy slicing at this granularity, but still O(width) Python ops per
-such row). For JPEG, or pipelines dominated by Paeth-filtered PNGs,
-the native decoder behind the cv2/PIL gate is the fast path.
+such row). For pipelines dominated by Paeth-filtered PNGs, the native
+decoder behind the cv2/PIL gate is the fast path.
 
 PNG support: 8-bit depth, color types 0/2/3/4/6 (gray, RGB, palette,
 gray+alpha, RGBA), non-interlaced. ``encode_png`` writes color type
 2/0 with per-row filters — round-trip partner and test oracle.
-BMP support: BITMAPINFOHEADER, 24/32-bit uncompressed, bottom-up and
-top-down.
 """
 
 from __future__ import annotations
@@ -41,7 +35,6 @@ import zlib
 import numpy as np
 
 PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
-BMP_MAGIC = b"BM"
 
 _CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
 MAX_DIM = 32_768  # per-axis decode cap: past this a corrupted header is
@@ -49,13 +42,10 @@ MAX_DIM = 32_768  # per-axis decode cap: past this a corrupted header is
 
 
 def sniff_format(buf: bytes) -> str | None:
-    """'png' | 'bmp' | 'jpeg' | 'gif' | 'tiff' | None by magic bytes."""
+    """'png' | 'gif' | 'tiff' | None by magic bytes: the formats this
+    package decodes."""
     if buf[:8] == PNG_MAGIC:
         return "png"
-    if buf[:2] == BMP_MAGIC:
-        return "bmp"
-    if buf[:3] == b"\xff\xd8\xff":
-        return "jpeg"
     if buf[:6] in (b"GIF87a", b"GIF89a"):
         return "gif"
     if buf[:4] in (b"II*\x00", b"MM\x00*"):
@@ -252,76 +242,3 @@ def encode_png(
         + chunk(b"IEND", b"")
     )
 
-
-# --- BMP ----------------------------------------------------------------------
-
-
-def decode_bmp(buf: bytes) -> np.ndarray:
-    """BMP (BITMAPINFOHEADER, 24/32-bit uncompressed) → uint8 BGR.
-    BMP stores BGR(A) natively, bottom-up unless height is negative."""
-    if buf[:2] != BMP_MAGIC:
-        raise ValueError("not a BMP buffer")
-    # length-guard the fixed header reads: struct.unpack raises
-    # struct.error (NOT ValueError) on short slices, which would escape
-    # decode_image's ValueError seam and kill the mapInPandas task
-    # instead of degrading to the stub (ADVICE r5)
-    if len(buf) < 54:
-        raise ValueError(f"truncated BMP header ({len(buf)} bytes)")
-    (data_off,) = struct.unpack("<I", buf[10:14])
-    (hdr_size,) = struct.unpack("<I", buf[14:18])
-    if hdr_size < 40:
-        raise ValueError(f"unsupported BMP header size {hdr_size}")
-    width, height = struct.unpack("<ii", buf[18:26])
-    planes, bpp = struct.unpack("<HH", buf[26:30])
-    (compression,) = struct.unpack("<I", buf[30:34])
-    if compression not in (0, 3) or bpp not in (24, 32):
-        raise ValueError(
-            f"unsupported BMP (bpp={bpp}, compression={compression})"
-        )
-    if not (0 < width <= MAX_DIM and 0 < abs(height) <= MAX_DIM):
-        raise ValueError(
-            f"refusing BMP dimensions {width}x{height} "
-            f"(corrupted header, or beyond the {MAX_DIM} per-axis cap)"
-        )
-    if compression == 3:
-        if len(buf) < 66:
-            raise ValueError("truncated BMP BI_BITFIELDS masks")
-        # BI_BITFIELDS: honor the channel masks instead of assuming
-        # BGRA — accept only the standard layout, reject the rest
-        # loudly (decoding them would silently swap channels)
-        # masks sit at absolute offset 54 both for BITMAPINFOHEADER
-        # (appended after the 40-byte header) and V4/V5 (in-header
-        # RedMask field at the same absolute position)
-        masks = struct.unpack("<III", buf[54:66])
-        if masks != (0x00FF0000, 0x0000FF00, 0x000000FF):
-            raise ValueError(
-                f"unsupported BMP BI_BITFIELDS masks {tuple(hex(m) for m in masks)}"
-                " (only the standard BGRA layout is supported)"
-            )
-    top_down = height < 0
-    height = abs(height)
-    ch = bpp // 8
-    stride = (width * ch + 3) & ~3  # rows pad to 4 bytes
-    need = data_off + stride * height
-    if len(buf) < need:
-        raise ValueError("truncated BMP pixel array")
-    rows = np.frombuffer(
-        buf, dtype=np.uint8, count=stride * height, offset=data_off
-    ).reshape(height, stride)
-    px = rows[:, : width * ch].reshape(height, width, ch)
-    if not top_down:
-        px = px[::-1]
-    return px[:, :, :3].copy()  # BGRA → BGR (BMP is already BGR order)
-
-
-def encode_bmp(bgr: np.ndarray) -> bytes:
-    """uint8 BGR (h, w, 3) → 24-bit bottom-up BMP bytes."""
-    h, w = bgr.shape[:2]
-    stride = (w * 3 + 3) & ~3
-    rows = np.zeros((h, stride), dtype=np.uint8)
-    rows[:, : w * 3] = bgr[::-1].reshape(h, w * 3)
-    pixels = rows.tobytes()
-    header = struct.pack(
-        "<2sIHHI", BMP_MAGIC, 54 + len(pixels), 0, 0, 54
-    ) + struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(pixels), 2835, 2835, 0, 0)
-    return header + pixels

@@ -7,13 +7,11 @@ Conventions:
 - pointer: ``image_uri StringType`` for the 100 TB posture,
 - metadata: plain columns (width/height/format), never packed blobs.
 
-Decode status (r6): PNG, BMP (r5, operators/imagecodec.py) AND
-baseline + progressive JPEG (r6/r7, operators/jpegcodec.py — Annex
-K Huffman + IDCT + T.81 Annex G successive approximation) byte→pixel
-decode are REAL with zero external deps, selected by magic-byte
-sniffing; cv2/PIL are preferred when importable and remain the only
-path for exotic corners (arithmetic coding, 12-bit), whose absence
-leaves the deterministic byte-level stub. The
+Decode status: PNG (operators/imagecodec.py), GIF and TIFF
+(gifcodec.py, tiffcodec.py) byte→pixel decode is real with zero
+external deps, selected by magic-byte sniffing; cv2/PIL are preferred
+when importable and are the only path for every other format (JPEG,
+BMP, ...), whose absence leaves the deterministic byte-level stub. The
 Spark-side plumbing (schema, Arrow batch shape, mapInPandas
 signature, partitioning) is real and tested either way.
 The reference's equivalents are numpy_to_pil (main.py:139-140) and the
@@ -65,12 +63,12 @@ def read_image_dir(
     an object-store directory of image/clip files scanned with Spark's
     ``binaryFile`` source — (doc_id, payload, payload_uri) with the
     same shape ``with_binary_payload`` synthesizes from documents, so
-    every downstream operator (fire_pixel_scan, extract_features,
-    audio_feature_scan) runs unchanged on real files. doc_id is a
-    stable hash of the URI (xxhash64 — deterministic across runs,
-    collision-negligible at catalog scale); ``pathGlobFilter`` pushes
-    the extension filter into the file listing, and the size cap
-    filters pathological blobs BEFORE bytes move."""
+    every downstream operator (fire_pixel_scan, extract_features) runs
+    unchanged on real files. doc_id is a stable hash of the URI
+    (xxhash64 — deterministic across runs, collision-negligible at
+    catalog scale); ``pathGlobFilter`` pushes the extension filter into
+    the file listing, and the size cap filters pathological blobs
+    BEFORE bytes move."""
     r = spark.read.format("binaryFile")
     if glob:
         r = r.option("pathGlobFilter", glob)
@@ -83,17 +81,18 @@ def read_image_dir(
 
 
 def decode_image(buf: bytes) -> np.ndarray:
-    """Real decode via cv2/PIL when importable; REAL pure-stdlib decode
-    for PNG and BMP (operators/imagecodec.py — zlib + numpy, r5) and
-    baseline + progressive JPEG (operators/jpegcodec.py — Huffman +
-    IDCT, r6/r7) regardless; deterministic fake only for genuinely
-    unsupported corners (arithmetic coding, exotic formats) when no
-    lib is present. Always returns a uint8 array in cv2's BGR channel order
-    so everything downstream (preprocess_blob, feature histograms) is
-    convention-stable regardless of which decoder ran — matching the
-    reference, whose frames are cv2 BGR (main.py:143-149) and whose
-    RGB conversion is an explicit transform step (util.py:13-14,
-    blobFromImage swapRB).
+    """Real decode via cv2/PIL when importable; otherwise a real
+    pure-stdlib decode for PNG, GIF and TIFF (operators/imagecodec.py,
+    gifcodec.py, tiffcodec.py) and the deterministic fake for anything
+    else. Without cv2/PIL, JPEG and BMP files (say, read through
+    ``read_image_dir``) decode to the fake: the reference reads webcam
+    frames through cv2 and never decodes an image file, so the package
+    carries no codec for them. Always returns a uint8 array in cv2's
+    BGR channel order so everything downstream (preprocess_blob,
+    feature histograms) is convention-stable regardless of which
+    decoder ran — matching the reference, whose frames are cv2 BGR
+    (main.py:143-149) and whose RGB conversion is an explicit
+    transform step (util.py:13-14, blobFromImage swapRB).
 
     The fake 'image' is the byte buffer reshaped/padded to 8×8 — enough
     to exercise the downstream feature path deterministically.
@@ -108,19 +107,12 @@ def decode_image(buf: bytes) -> np.ndarray:
 
         img = np.asarray(Image.open(io.BytesIO(buf)).convert("RGB"))
         return img[:, :, ::-1].copy()  # RGB → BGR, cv2 convention
-    from .imagecodec import decode_bmp, decode_png, sniff_format
-    from .jpegcodec import decode_jpeg
+    from .imagecodec import decode_png, sniff_format
 
     fmt = sniff_format(bytes(buf))
     try:
         if fmt == "png":
             return decode_png(bytes(buf))
-        if fmt == "bmp":
-            return decode_bmp(bytes(buf))
-        if fmt == "jpeg":
-            # r6/r7: baseline AND progressive JFIF decode are real
-            # (jpegcodec.py); arithmetic/12-bit degrade to the stub
-            return decode_jpeg(bytes(buf))
         if fmt == "gif":
             from .gifcodec import decode_gif
 
@@ -130,10 +122,10 @@ def decode_image(buf: bytes) -> np.ndarray:
 
             return decode_tiff(bytes(buf))
     except ValueError:
-        # the no-lib seam stays TOTAL: a malformed/unsupported-corner
-        # buffer degrades to the deterministic stub (the container's
-        # documented degraded mode) instead of killing the Spark task —
-        # mirroring r4 behavior, where every buffer hit the stub. With
+        # the no-lib seam stays TOTAL: a malformed buffer degrades to
+        # the deterministic stub (the container's documented degraded
+        # mode) instead of killing the Spark task — mirroring r4
+        # behavior, where every buffer hit the stub. With
         # cv2/PIL present the native path above raises instead; callers
         # wanting loud failures in this container should call the
         # imagecodec decoders directly.

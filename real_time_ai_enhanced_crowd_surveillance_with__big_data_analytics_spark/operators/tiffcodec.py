@@ -1,9 +1,9 @@
 """From-scratch baseline TIFF codec (TIFF 6.0, public Adobe spec):
 IFD parsing in both byte orders, 8-bit grayscale and RGB, strip
 layout, Compression=1 (none) and 32773 (PackBits RLE).  Completes the
-scan-side container set next to PNG/BMP/GIF/JPEG
-(operators/imagecodec.py, gifcodec.py, jpegcodec.py) — TIFF is what
-scanners, scientific capture, and geo pipelines emit.
+scan-side container set next to PNG and GIF (operators/imagecodec.py,
+gifcodec.py) — TIFF is what scanners, scientific capture, and geo
+pipelines emit.
 
 Scope guards mirror the other codecs: ValueError on every malformed
 input (fuzz-tested containment), MAX_DIM / pixel-count caps so a

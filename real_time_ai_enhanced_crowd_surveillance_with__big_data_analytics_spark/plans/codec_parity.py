@@ -1,12 +1,12 @@
 """Codec-parity plans: the real image/audio codecs, hash-verified.
 
-The from-scratch PNG and WAV codecs (operators/imagecodec.py,
-operators/audiocodec.py — the zero-dependency decode path behind the
-reference's frame pipeline, main.py:129-171) were until now verified
-by unit tests only.  These plans promote them into the oracle-verified
-registry using the html_extract_quality pattern (VERDICT r6 #4): both
-engines derive the SAME deterministic media from table keys — Spark by
-actually ENCODING it to PNG/WAV bytes and DECODING it back through the
+The from-scratch PNG, GIF, TIFF and WAV codecs (operators/imagecodec.py,
+gifcodec.py, tiffcodec.py, audiocodec.py — the zero-dependency decode
+path behind the reference's frame pipeline, main.py:129-171) were
+until now verified by unit tests only.  These plans promote them into
+the oracle-verified registry using the html_extract_quality pattern
+(VERDICT r6 #4): both engines derive the SAME deterministic media from
+table keys — Spark by actually ENCODING it to image/WAV bytes and DECODING it back through the
 real codecs before computing features, DuckDB by evaluating the pixel/
 sample formula in closed form.  Any bit the encoder writes wrong or
 the decoder reads wrong lands in the value hash.

@@ -25,8 +25,7 @@ from .dedup import symmetrize_pairs
 
 _DQ = DUCK_QUALITY.format(text="text")
 
-# DuckDB-side cosine expressed with the same sequential-fold arithmetic
-# as functions/arrays.py (list_dot_product over DOUBLE lists).
+# DuckDB-side cosine: list_dot_product over DOUBLE lists.
 _DUCK_VEC = "list_transform({v}, x -> CAST(x AS DOUBLE))"
 _DUCK_DOT = "list_dot_product({a}, {b})"
 

@@ -41,10 +41,6 @@ _INFERENCE_CONFS = (
 _SCHEMAS: dict[str, tuple[tuple, T.StructType]] = {}
 
 
-def sf_dir() -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
-
-
 def load_table(spark: SparkSession, name: str, sf_path: str | None = None) -> DataFrame:
     """Read one driver table; column pruning + predicate pushdown apply.
     The schema is the one Spark infers from the file, memoized per file
@@ -66,7 +62,7 @@ def load_table(spark: SparkSession, name: str, sf_path: str | None = None) -> Da
     The cast is a codegen'd projection; pushdown on other columns is
     unaffected.
     """
-    base = sf_path or sf_dir()
+    base = sf_path or os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
     _ensure_session_conf(spark)
     df = read_parquet(spark, f"{base}/{name}.parquet")
     if name == "events":

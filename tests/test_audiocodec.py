@@ -1,7 +1,6 @@
-"""WAV codec + audio features (operators/audiocodec.py): round-trip
-exactness per bit depth, feature correctness on synthesized tones,
-ValueError containment under corruption, and the Spark mapInPandas
-feature path end-to-end with the total degrade seam."""
+"""WAV codec (operators/audiocodec.py): round-trip exactness per bit
+depth, refusal of every non-PCM format, and ValueError containment
+under corruption."""
 
 from __future__ import annotations
 
@@ -11,8 +10,6 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.operators.audiocodec import (
-    audio_features,
-    decode_audio,
     decode_wav,
     encode_wav,
 )
@@ -57,34 +54,19 @@ def test_pcm_24bit_decode():
     assert got == vals
 
 
-def test_features_on_pure_tone():
-    """440 Hz sine: ZCR = 2f crossings/s → f Hz after /2 convention;
-    spectral centroid and rolloff sit on the tone."""
-    rate = 8000
-    x = _sine(440, rate, 1.0)[:, None]
-    f = audio_features(x, rate)
-    assert abs(f["duration_s"] - 1.0) < 1e-6
-    assert abs(f["rms"] - 1 / np.sqrt(2)) < 0.01
-    assert abs(f["peak"] - 1.0) < 0.01
-    assert abs(f["zcr_hz"] - 440) < 5
-    assert abs(f["centroid_hz"] - 440) < 5
-    assert abs(f["rolloff_hz"] - 440) < 10
-
-
-def test_features_silence_and_empty():
-    f = audio_features(np.zeros((100, 1)), 8000)
-    assert f["rms"] == 0.0 and f["centroid_hz"] == 0.0
-    f0 = audio_features(np.zeros((0, 1)), 8000)
-    assert f0["duration_s"] == 0.0
-
-
-def test_unsupported_formats_raise_valueerror():
+@pytest.mark.parametrize(
+    "audio_fmt,bits",
+    [(85, 0), (6, 8), (7, 8), (0x11, 4)],
+    ids=["mp3", "alaw", "mulaw", "ima_adpcm"],
+)
+def test_unsupported_formats_raise_valueerror(audio_fmt, bits):
+    """MP3 in a RIFF wrapper, G.711 A-law/mu-law and IMA ADPCM, each with
+    the bit depth its format declares: refused, never decoded."""
     import struct
 
-    # audio format 85 (MP3 in a RIFF wrapper): must refuse, not decode
     body = (
         b"WAVE"
-        + b"fmt " + struct.pack("<IHHIIHH", 16, 85, 2, 44100, 0, 0, 0)
+        + b"fmt " + struct.pack("<IHHIIHH", 16, audio_fmt, 2, 44100, 0, 0, bits)
         + b"data" + struct.pack("<I", 4) + b"\x00" * 4
     )
     buf = b"RIFF" + struct.pack("<I", len(body)) + body
@@ -112,87 +94,3 @@ def test_corrupted_wav_never_leaks_foreign_exceptions(seed, n_flips):
         assert y.ndim == 2 and rate >= 1
     except ValueError:
         pass
-
-
-def test_spark_audio_feature_scan(spark):
-    """End-to-end: WAV payloads produce real tone features; a garbage
-    payload degrades to the byte-derived fake instead of failing."""
-    import pandas as pd
-
-    from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.operators.audiocodec import (
-        audio_feature_scan,
-    )
-
-    tone = encode_wav(_sine(440, 8000, 0.25)[:, None], 8000)
-    pdf = pd.DataFrame({"doc_id": [1, 2], "payload": [tone, b"\x01\x02junk"]})
-    out = {r.doc_id: r for r in audio_feature_scan(spark.createDataFrame(pdf)).collect()}
-    assert abs(out[1].centroid_hz - 440) < 5
-    assert out[1].sample_rate == 8000
-    assert out[2].sample_rate == 8000  # fake path, still total
-    assert out[2].duration_s > 0
-
-
-def test_decode_audio_seam_total():
-    y, rate = decode_audio(b"")  # empty buffer → empty fake, no raise
-    assert y.shape[1] == 1 and rate == 8000
-
-
-def test_g711_expand_spec_anchors():
-    """ITU-T G.711 anchor values: +/-0 codes and segment-0 steps."""
-    from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.operators.audiocodec import (
-        _ALAW_TABLE,
-        _ULAW_TABLE,
-    )
-
-    assert _ULAW_TABLE[0xFF] == 0 and _ULAW_TABLE[0x7F] == 0
-    assert _ULAW_TABLE[0x00] == -32124 and _ULAW_TABLE[0x80] == 32124
-    assert _ALAW_TABLE[0x55] == -8 and _ALAW_TABLE[0xD5] == 8
-    assert _ALAW_TABLE[0x2A] == -32256 and _ALAW_TABLE[0xAA] == 32256
-    # companding is monotone within each sign half
-    for tbl in (_ULAW_TABLE, _ALAW_TABLE):
-        pos = sorted(int(v) for v in tbl if v > 0)
-        assert len(set(pos)) == len(pos)
-
-
-def test_g711_wav_roundtrip_both_laws():
-    from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.operators.audiocodec import (
-        _ALAW_TABLE,
-        _ULAW_TABLE,
-        encode_wav_g711,
-    )
-
-    x = _sine(440, 8000, 0.1)
-    for law, tbl in (("u", _ULAW_TABLE), ("a", _ALAW_TABLE)):
-        buf = encode_wav_g711(x, 8000, law=law)
-        y, rate = decode_wav(buf)
-        assert rate == 8000 and y.shape == (len(x), 1)
-        # every decoded sample is ON the G.711 lattice and the nearest
-        # lattice point to the input (the encoder contract)
-        lattice = np.sort(np.unique(tbl.astype(np.int64)))
-        got = np.round(y[:, 0] * 32768.0).astype(np.int64)
-        assert set(got.tolist()) <= set(lattice.tolist())
-        want_pcm = np.clip(np.floor(x * 32768.0 + 0.5), -32768, 32767)
-        err = np.abs(got - want_pcm)
-        idx = np.searchsorted(lattice, want_pcm)
-        lo = np.clip(idx - 1, 0, len(lattice) - 1)
-        hi = np.clip(idx, 0, len(lattice) - 1)
-        best = np.minimum(
-            np.abs(lattice[lo] - want_pcm), np.abs(lattice[hi] - want_pcm)
-        )
-        assert np.array_equal(err, best)
-
-    with pytest.raises(ValueError, match="law"):
-        encode_wav_g711(x, 8000, law="x")
-
-
-def test_g711_rejects_wrong_depth():
-    import struct
-
-    body = (
-        b"WAVE"
-        + b"fmt " + struct.pack("<IHHIIHH", 16, 7, 1, 8000, 8000, 1, 16)
-        + b"data" + struct.pack("<I", 2) + b"\x00\x00"
-    )
-    buf = b"RIFF" + struct.pack("<I", len(body)) + body
-    with pytest.raises(ValueError, match="G.711 bit depth"):
-        decode_wav(buf)

@@ -259,15 +259,15 @@ def test_bitwise_mask_apply_cv2_semantics():
 
 
 def test_read_image_dir_binaryfile_pipeline(spark, tmp_path):
-    """Real-file ingestion: a directory of BMP/JPEG files through the
+    """Real-file ingestion: a directory of PNG/GIF files through the
     binaryFile source feeds the standard operators unchanged — decoded
     dimensions are real (not the 8x8 stub), the glob filter prunes at
     the listing, doc_ids are stable across reads."""
-    from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.operators.imagecodec import (
-        encode_bmp,
+    from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.operators.gifcodec import (
+        encode_gif,
     )
-    from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.operators.jpegcodec import (
-        encode_jpeg,
+    from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.operators.imagecodec import (
+        encode_png,
     )
     from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.operators.multimodal import (
         decode_image,
@@ -279,14 +279,14 @@ def test_read_image_dir_binaryfile_pipeline(spark, tmp_path):
     d.mkdir()
     flame = np.zeros((20, 20, 3), dtype=np.uint8)
     flame[5:15, 5:15] = (0, 200, 255)
-    (d / "a.bmp").write_bytes(encode_bmp(flame))
-    (d / "b.jpg").write_bytes(encode_jpeg(flame, quality=95))
+    (d / "a.png").write_bytes(encode_png(flame))
+    (d / "b.gif").write_bytes(encode_gif(flame))
     (d / "notes.txt").write_bytes(b"not an image")
 
-    df = read_image_dir(spark, str(d), glob="*.{bmp,jpg}")
+    df = read_image_dir(spark, str(d), glob="*.{png,gif}")
     rows = df.collect()
     assert len(rows) == 2  # txt pruned at the listing
-    assert {r.payload_uri.rsplit("/", 1)[-1] for r in rows} == {"a.bmp", "b.jpg"}
+    assert {r.payload_uri.rsplit("/", 1)[-1] for r in rows} == {"a.png", "b.gif"}
     for r in rows:
         assert decode_image(bytes(r.payload)).shape == (20, 20, 3)
 
