@@ -27,11 +27,17 @@ from pyspark.sql import functions as F
 # longs (~16 B + row overhead), so 1M edges ≈ 16-32 MB per task — big
 # enough that scheduling doesn't dominate, small enough to never spill
 EDGES_PER_PARTITION = 1_000_000
+# at or below this many edges a graph is solved on the driver; k-core
+# (plans/dedup.py) reads the same gate through this module attribute
+DRIVER_FALLBACK_EDGES = 100_000
+# star-contraction converges in O(log^2 n) rounds; this cap only guards
+# against a bug
+MAX_ROUNDS = 30
 
 
 def _edge_partitions(n_edges: int) -> int:
     """Partition count for the iterative edge frame, derived from the
-    measured (deduped) edge count instead of a hardcoded constant: a
+    measured edge count instead of a hardcoded constant: a
     fixed coalesce(1) serializes the rounds on a 1B-edge graph, a fixed
     32 fragments a 200k-edge one into scheduling overhead. Linear in
     the graph, floor 1 — at 100 TB a multi-billion-edge near-dup graph
@@ -107,12 +113,7 @@ def _driver_union_find(edge_rows) -> list[tuple[int, int]]:
 
 
 def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_rounds: int = 30,
-    driver_fallback_edges: int = 100_000,
-    assume_distinct: bool = False,
+    edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
     """Labels (node, component) with component = min node id reachable.
 
@@ -122,7 +123,7 @@ def connected_components(
     round localCheckpoints to truncate lineage — without it the plan
     doubles per round and planning time dominates at ~10 rounds.
 
-    Adaptive execution: below ``driver_fallback_edges`` deduped edges
+    Adaptive execution: up to ``DRIVER_FALLBACK_EDGES`` edges
     the graph is collected and solved with union-find on the driver —
     at that size the distributed loop is pure scheduling overhead
     (~6 shuffles × several rounds for microseconds of actual work).
@@ -135,20 +136,18 @@ def connected_components(
     canonically oriented (src > dst), so a changed-row count against
     the previous round is an exact fixed-point test, not a heuristic.
 
-    ``assume_distinct``: callers whose edge list is distinct by
-    construction (a groupBy-produced pair frame) skip the initial
-    distinct — one exchange + stage less on the materialization path.
-    Duplicates would only inflate the threshold/partition counts, but
-    the flag is a caller-stated invariant, not a runtime check.
+    The input edges are not deduplicated: every caller passes a pair
+    frame that is distinct by construction (a groupBy output), and a
+    duplicate would only inflate the edge count that sizes the gate
+    and the partitions — the rounds dedupe their own output.
     """
-    cur = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).filter(
-        F.col("src") != F.col("dst")
+    cur = (
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        .filter(F.col("src") != F.col("dst"))
+        .localCheckpoint()
     )
-    if not assume_distinct:
-        cur = cur.distinct()
-    cur = cur.localCheckpoint()
     n_edges = cur.count()
-    if n_edges <= driver_fallback_edges:
+    if n_edges <= DRIVER_FALLBACK_EDGES:
         labels = _driver_union_find(
             [(r.src, r.dst) for r in cur.collect()]
         )
@@ -170,7 +169,7 @@ def connected_components(
         .localCheckpoint()
     )
     converged = False
-    for _ in range(max_rounds):
+    for _ in range(MAX_ROUNDS):
         nxt = _small_star(_large_star(cur)).localCheckpoint()
         # one-job symmetric-difference probe (vs two anti-join counts)
         changed = (
@@ -190,8 +189,8 @@ def connected_components(
         # a non-minimal parent). Fail loudly rather than return bad
         # components (ADVICE r1).
         raise RuntimeError(
-            f"connected_components did not converge in {max_rounds} "
-            f"rounds ({n_edges} edges); raise max_rounds"
+            f"connected_components did not converge in {MAX_ROUNDS} "
+            f"rounds ({n_edges} edges)"
         )
     # fixed point is a star forest: src -> component min
     parents = cur.groupBy("src").agg(F.min("dst").alias("component"))

@@ -56,43 +56,19 @@ def with_binary_payload(docs: DataFrame) -> DataFrame:
     )
 
 
-def read_image_dir(
-    spark, path: str, glob: str | None = None, max_bytes: int = 64 << 20
-) -> DataFrame:
-    """The 100 TB ingestion posture the column conventions point at:
-    an object-store directory of image/clip files scanned with Spark's
-    ``binaryFile`` source — (doc_id, payload, payload_uri) with the
-    same shape ``with_binary_payload`` synthesizes from documents, so
-    every downstream operator (fire_pixel_scan, extract_features) runs
-    unchanged on real files. doc_id is a stable hash of the URI
-    (xxhash64 — deterministic across runs, collision-negligible at
-    catalog scale); ``pathGlobFilter`` pushes the extension filter into
-    the file listing, and the size cap filters pathological blobs
-    BEFORE bytes move."""
-    r = spark.read.format("binaryFile")
-    if glob:
-        r = r.option("pathGlobFilter", glob)
-    files = r.load(path)
-    return files.filter(F.col("length") <= max_bytes).select(
-        F.xxhash64(F.col("path")).alias("doc_id"),
-        F.col("content").alias("payload"),
-        F.col("path").alias("payload_uri"),
-    )
-
-
 def decode_image(buf: bytes) -> np.ndarray:
     """Real decode via cv2/PIL when importable; otherwise a real
     pure-stdlib decode for PNG, GIF and TIFF (operators/imagecodec.py,
     gifcodec.py, tiffcodec.py) and the deterministic fake for anything
-    else. Without cv2/PIL, JPEG and BMP files (say, read through
-    ``read_image_dir``) decode to the fake: the reference reads webcam
-    frames through cv2 and never decodes an image file, so the package
-    carries no codec for them. Always returns a uint8 array in cv2's
-    BGR channel order so everything downstream (preprocess_blob,
-    feature histograms) is convention-stable regardless of which
-    decoder ran — matching the reference, whose frames are cv2 BGR
-    (main.py:143-149) and whose RGB conversion is an explicit
-    transform step (util.py:13-14, blobFromImage swapRB).
+    else. Without cv2/PIL, JPEG and BMP buffers decode to the fake:
+    the reference reads webcam frames through cv2 and never decodes an
+    image file, so the package carries no codec for them. Always
+    returns a uint8 array in cv2's BGR channel order so everything
+    downstream (preprocess_blob, feature histograms) is
+    convention-stable regardless of which decoder ran — matching the
+    reference, whose frames are cv2 BGR (main.py:143-149) and whose
+    RGB conversion is an explicit transform step (util.py:13-14,
+    blobFromImage swapRB).
 
     The fake 'image' is the byte buffer reshaped/padded to 8×8 — enough
     to exercise the downstream feature path deterministically.

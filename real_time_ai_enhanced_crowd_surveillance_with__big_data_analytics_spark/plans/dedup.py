@@ -1537,11 +1537,9 @@ def dedup_clusters(spark: SparkSession, sf: str) -> DataFrame:
 
     # partitioning of the iterative rounds is derived inside
     # connected_components from the measured edge count
-    # edges are distinct by the groupBy(ia, ib) construction — skip
-    # the CC operator's defensive distinct (one exchange less)
-    labels = connected_components(
-        edges, src="ia", dst="ib", assume_distinct=True
-    ).select(F.col("node").alias("doc_id"), F.col("component").alias("cluster_id"))
+    labels = connected_components(edges, src="ia", dst="ib").select(
+        F.col("node").alias("doc_id"), F.col("component").alias("cluster_id")
+    )
     from pyspark.sql import Window
 
     w = Window.partitionBy("cluster_id")
@@ -1639,9 +1637,9 @@ def dedup_keep_canonical(spark: SparkSession, sf: str) -> DataFrame:
     edges = _neardup_edges(docs)
     from ..operators.connected_components import connected_components
 
-    labels = connected_components(
-        edges, src="ia", dst="ib", assume_distinct=True
-    ).select(F.col("node").alias("doc_id"), F.col("component").alias("cid"))
+    labels = connected_components(edges, src="ia", dst="ib").select(
+        F.col("node").alias("doc_id"), F.col("component").alias("cid")
+    )
     full = (
         docs.select("doc_id", "n_chars")
         .join(F.broadcast(labels), "doc_id", "left")
@@ -1890,9 +1888,6 @@ SELECT t.n_triangles, s.n_edges, s.n_nodes FROM tri t CROSS JOIN stats s
 
 KCORE_K = 2        # core order: keep nodes with >= K surviving neighbors
 KCORE_ROUNDS = 8   # bounded peeling depth (fixpoint asserted in tests)
-# below this many symmetrized edges the peel runs on the driver (the
-# connected_components driver_fallback_edges convention)
-KCORE_DRIVER_FALLBACK_EDGES = 100_000
 
 
 def _driver_kcore(edge_rows: list) -> list:
@@ -1943,7 +1938,8 @@ def kcore_decomposition(spark: SparkSession, sf: str) -> DataFrame:
     whole chain, doubling work per round).
 
     Adaptive execution (r10, the ``connected_components`` precedent):
-    below KCORE_DRIVER_FALLBACK_EDGES symmetrized edges the peel runs
+    up to ``connected_components.DRIVER_FALLBACK_EDGES`` symmetrized
+    edges (the same gate, read through the module) the peel runs
     as a driver loop over collected pairs — at that size the
     distributed rounds are pure scheduling overhead (≤ R × (aggregate
     + two joins + checkpoint + count job) for microseconds of work).
@@ -1952,13 +1948,15 @@ def kcore_decomposition(spark: SparkSession, sf: str) -> DataFrame:
     is the only path that matters at 100 TB and stays the default
     above the threshold.
     """
+    from ..operators import connected_components as cc
+
     docs = load_table(spark, "documents", sf)
     base = _neardup_edges(docs).select("ia", "ib")
     # explode-symmetrize: ONE execution of the jaccard pipeline (the
     # union form ran it once per branch inside this checkpoint)
     cur = symmetrize_pairs(base).localCheckpoint()
     n_prev = cur.count()
-    if n_prev <= KCORE_DRIVER_FALLBACK_EDGES:
+    if n_prev <= cc.DRIVER_FALLBACK_EDGES:
         labels = _driver_kcore([(r.ia, r.ib) for r in cur.collect()])
         return spark.createDataFrame(
             labels or [], "doc_id long, core_deg long"

@@ -159,12 +159,9 @@ def _train_codebook(emb: DataFrame) -> dict[int, tuple[np.ndarray, np.ndarray]]:
     spark = emb.sparkSession
     n_train = src.count()
     if n_train <= PQ_TRAIN_DRIVER_MAX:
-        rows = src.collect()
-        vids = np.asarray([r.vec_id for r in rows], dtype=np.int64)
-        xq = _quantize(
-            pd.DataFrame({"embedding": [list(r.embedding) for r in rows]})
-        )
-        return _driver_train(xq, vids)
+        # Arrow transfer (on in get_spark): no Row per vector
+        pdf = src.toPandas()
+        return _driver_train(_quantize(pdf), pdf["vec_id"].to_numpy(dtype="int64"))
 
     def partial_pass(cb):
         bc = spark.sparkContext.broadcast(cb)

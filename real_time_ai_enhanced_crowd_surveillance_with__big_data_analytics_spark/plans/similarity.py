@@ -1031,10 +1031,7 @@ def embedding_dedup_clusters(spark: SparkSession, sf: str) -> DataFrame:
     pairs = embedding_neardup_lsh(spark, sf).select("ia", "ib")
     from ..operators.connected_components import connected_components
 
-    # pairs are distinct by the groupBy(ia, ib) canonical-cosine agg
-    labels = connected_components(
-        pairs, src="ia", dst="ib", assume_distinct=True
-    ).select(
+    labels = connected_components(pairs, src="ia", dst="ib").select(
         F.col("node").alias("vec_id"), F.col("component").alias("cluster_id")
     )
     from pyspark.sql import Window

@@ -46,10 +46,10 @@ def streaming_crowd_density(
     """Per (event-time window, grid cell): event count, exact cent
     volume, error count, and a hot flag.
 
-    The wide default watermark is the replay-safe convention
-    (runner.windowed_trend) — production tightens it to the real
-    late-data bound; state stays (windows in flight) x (<= 400 cells)
-    either way.
+    The wide default watermark is replay-safe: the replay's chunks
+    are event_id-ordered, not ts-ordered (runner.stream_events).
+    Production tightens it to the real late-data bound; state stays
+    (windows in flight) x (<= 400 cells) either way.
     """
     return _density(events, window, hot_min, watermark)
 

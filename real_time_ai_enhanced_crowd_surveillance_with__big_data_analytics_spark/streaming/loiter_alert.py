@@ -10,7 +10,7 @@ alarmed flag — five ints, |subjects|-bounded. A zone change resets the
 run (and re-arms the alarm); further observations inside an alarmed
 run stay silent. Over ts-ordered arrival the alarms are exactly the
 batch episodes' threshold crossings (pinned against loiter_episodes);
-disorder is arrival-greedy like the funnel/OD trackers.
+disorder is arrival-greedy like the OD tracker.
 """
 
 from __future__ import annotations

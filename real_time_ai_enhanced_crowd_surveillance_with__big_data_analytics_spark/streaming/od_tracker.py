@@ -10,9 +10,8 @@ ints — bounded by |subjects|, never by stream length. Arrival order
 within a micro-batch is normalized by (ts, event_id) sort, so over the
 ts-ordered replay the emitted edge set is EXACTLY the batch lag
 chain's (pinned by the parity test); out-of-order arrival is
-arrival-greedy like the funnel monitor (a late event older than the
-remembered one is ignored rather than rewriting history — pinned
-explicitly)."""
+arrival-greedy (a late event older than the remembered one is ignored
+rather than rewriting history — pinned explicitly)."""
 
 from __future__ import annotations
 

@@ -110,70 +110,6 @@ def stream_events(spark: SparkSession, sf_path: str) -> DataFrame:
     return normalize_events_ts(raw)
 
 
-def windowed_trend(events: DataFrame, window: str = "1 day", watermark: str = "2 days") -> DataFrame:
-    """Event-time trend rollup with late-data handling — the
-    'historical trend analysis' (README.md:2) in streaming form:
-    tumbling windows per event_type, counts + value sums. Watermark
-    bounds state; at scale the window key partitions evenly."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("win"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .select(
-            F.date_format(F.col("win.start"), "yyyy-MM-dd").alias("day"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
-def streaming_session_stats(
-    events: DataFrame, gap_min: int = 30, watermark: str = "35 days"
-) -> DataFrame:
-    """Per-user session aggregation with Spark's NATIVE merging session
-    windows under Structured Streaming — the streaming twin of the
-    batch ``plans.relational.session_window_stats``. Sessions whose
-    events arrive across micro-batches are merged by the session state
-    store; the watermark bounds how long an open session can wait for
-    more events (wide default = replay-safe, see ``windowed_trend``).
-    State per key is one (start, end, aggs) tuple per open session —
-    eviction happens when the watermark passes session end + gap."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(
-            F.session_window("ts", f"{gap_min} minutes").alias("w"),
-            "user_id",
-        )
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .select(
-            "user_id",
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias(
-                "session_start"
-            ),
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
-def enrich_stream_with_dim(stream: DataFrame, dim: DataFrame) -> DataFrame:
-    """Stream-static enrichment join: every micro-batch of the
-    unbounded side joins the static dimension (re-read per batch, so a
-    refreshed dim table is picked up without restarting the query).
-    The static side broadcasts — the stream never shuffles for the
-    join, which is the only sane shape at 100 TB event rates; stateful
-    stream-stream joins (click_purchase_pairs) are for when BOTH sides
-    are unbounded."""
-    return stream.join(F.broadcast(dim), "user_id", "left")
-
-
 def run_to_memory(df: DataFrame, name: str, output_mode: str = "append"):
     """Drive a streaming frame to a memory sink synchronously (test
     harness; production would be Kafka/foreachBatch)."""

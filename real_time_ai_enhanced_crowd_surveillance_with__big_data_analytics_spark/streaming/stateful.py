@@ -87,107 +87,6 @@ def _edge_fn(threshold: float, ttl_ms: int):
     return fn
 
 
-EPISODE_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType(), False),
-        T.StructField("episode_start_ms", T.LongType(), False),
-        T.StructField("episode_end_ms", T.LongType(), False),
-        T.StructField("n_events", T.LongType(), False),
-        T.StructField("peak_value", T.DoubleType(), False),
-    ]
-)
-
-_EPISODE_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("in_run", T.BooleanType(), True),
-        T.StructField("start_ms", T.LongType(), True),
-        T.StructField("end_ms", T.LongType(), True),
-        T.StructField("n_events", T.LongType(), True),
-        T.StructField("peak", T.DoubleType(), True),
-        T.StructField("max_ts_ms", T.LongType(), True),
-    ]
-)
-
-
-def _episode_fn(threshold: float, ttl_ms: int):
-    def fn(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
-        (user_id,) = key
-        if state.hasTimedOut:
-            # idle camera: drop the cell. An episode still open across
-            # the idle gap is lost — the documented trade for a bounded
-            # store (the batch census recovers it offline).
-            state.remove()
-            return
-        in_run, start_ms, end_ms, n_ev, peak, max_ts_ms = (
-            state.get if state.exists else (False, 0, 0, 0, 0.0, 0)
-        )
-        closed = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values("event_id")
-            for value, ts in zip(pdf["value"], pdf["ts"]):
-                ts_ms = int(ts.value // 1_000_000)
-                max_ts_ms = max(max_ts_ms, ts_ms)
-                if value > threshold:
-                    if in_run:
-                        end_ms, n_ev = ts_ms, n_ev + 1
-                        peak = max(peak, float(value))
-                    else:
-                        in_run = True
-                        start_ms = end_ms = ts_ms
-                        n_ev, peak = 1, float(value)
-                elif in_run:
-                    # falling edge closes the episode — emit exactly once
-                    closed.append((user_id, start_ms, end_ms, n_ev, peak))
-                    in_run = False
-        # a key that has never alarmed needs no cell: updating state for
-        # every camera would scale the store with TOTAL key cardinality
-        # instead of alarming-key cardinality (a 100x tax when 1% of
-        # cameras ever alarm). Only open runs and already-materialized
-        # cells are written; the TTL then bounds those.
-        if in_run or state.exists:
-            state.update((in_run, start_ms, end_ms, n_ev, peak, max_ts_ms))
-            wm_ms = state.getCurrentWatermarkMs()
-            state.setTimeoutTimestamp(max(max_ts_ms, wm_ms + 1) + ttl_ms)
-        yield pd.DataFrame(
-            closed,
-            columns=[
-                "user_id", "episode_start_ms", "episode_end_ms",
-                "n_events", "peak_value",
-            ],
-        )
-
-    return fn
-
-
-def streaming_alarm_episodes(
-    events: DataFrame,
-    threshold: float = 150.0,
-    idle_ttl_ms: int = 86_400_000,
-    watermark: str = "35 days",
-) -> DataFrame:
-    """Completed alarm EPISODES over an unbounded stream (the batch
-    twin is ``plans/timeseries.py::alarm_episodes``): per-key O(1)
-    state accumulates the open run and emits one row when the falling
-    edge closes it — append-mode-safe because a closed episode is
-    immutable. Same arrival-order semantics as the rising-edge
-    operator (event_id order per key), same event-time TTL eviction of
-    idle cameras."""
-    return (
-        events.select("ts", "user_id", "event_id", "value")
-        .withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _episode_fn(threshold, idle_ttl_ms),
-            outputStructType=EPISODE_OUTPUT_SCHEMA,
-            stateStructType=_EPISODE_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
 def streaming_rising_edges(
     events: DataFrame,
     threshold: float = 150.0,

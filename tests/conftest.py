@@ -100,6 +100,26 @@ def events_chunk_schema():
     )
 
 
+def cleared_welch_rule(
+    n_c: int, s_c: int, q_c: int, n_t: int, s_t: int, q_t: int
+) -> bool:
+    """``plans/ml_eval.py::ab_test_report``'s 2σ Welch decision with
+    every denominator cleared, on per-arm (n, Σx, Σx²) in exact Python
+    ints — the one Python statement of the rule the SQL encodes, which
+    the A/B report tests check against a float reference and against
+    Fractions."""
+    from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.plans.ml_eval import (
+        AB_SIGMA,
+    )
+
+    lhs = (s_t * n_c - s_c * n_t) ** 2 * (n_t - 1) * (n_c - 1)
+    rhs = AB_SIGMA * AB_SIGMA * (
+        (q_t * n_t - s_t * s_t) * n_c * n_c * (n_c - 1)
+        + (q_c * n_c - s_c * s_c) * n_t * n_t * (n_t - 1)
+    )
+    return lhs > rhs
+
+
 @contextlib.contextmanager
 def rocksdb_state_store(spark):
     """Streams started inside the block keep their state in RocksDB;

@@ -7,13 +7,11 @@ from __future__ import annotations
 import math
 
 import duckdb
+from conftest import cleared_welch_rule
 
 from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.plans.ml_eval import (
     AB_SIGMA,
     ab_test_report,
-)
-from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.streaming.ab_monitor import (
-    decide as _int_rule,  # the ONE Python definition of the cleared rule
 )
 
 SF = "/root/testdata/sf0.001"
@@ -44,7 +42,7 @@ def test_integer_rule_equals_float_welch_threshold():
         z = _welch_z(*args)
         if abs(abs(z) - AB_SIGMA) < 0.05:
             continue  # knife edge
-        assert _int_rule(*args) == (abs(z) > AB_SIGMA), (shift, z)
+        assert cleared_welch_rule(*args) == (abs(z) > AB_SIGMA), (shift, z)
         flips[abs(z) > AB_SIGMA] += 1
     assert flips[True] and flips[False], "sweep never crossed the boundary"
 
@@ -67,7 +65,7 @@ def test_report_matches_direct(spark):
         assert r["mean_c_e6"] == (1_000_000 * s_c) // n_c
         assert r["mean_t_e6"] == (1_000_000 * s_t) // n_t
         assert r["effect_e6"] == (1_000_000 * s_t) // n_t - (1_000_000 * s_c) // n_c
-        assert r["significant"] == _int_rule(n_c, s_c, q_c, n_t, s_t, q_t)
+        assert r["significant"] == cleared_welch_rule(n_c, s_c, q_c, n_t, s_t, q_t)
         assert r["srm_flag"] == (
             (n_c - n_t) ** 2 > AB_SIGMA * AB_SIGMA * (n_c + n_t)
         )

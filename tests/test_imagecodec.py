@@ -136,8 +136,13 @@ def test_decode_image_routes_by_magic():
 
     if HAS_IMAGE_LIBS:  # pragma: no cover - container has no cv2/PIL
         pytest.skip("cv2/PIL present; native decoders take precedence")
+    from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.operators.gifcodec import (
+        encode_gif,
+    )
+
     bgr = _img(8, 8)
     assert np.array_equal(decode_image(encode_png(bgr, filters=2)), bgr)
+    assert np.array_equal(decode_image(encode_gif(bgr)), bgr)
     # JPEG and BMP have no decoder here: like non-image bytes they hit
     # the deterministic stub, the buffer's first 64 bytes as 8x8 gray
     for magic in (b"\xff\xd8\xff\xe0", b"BM"):

@@ -114,13 +114,14 @@ def test_clustering_coefficient_matches_python(spark, sf_dir):
 
 
 def test_driver_fallback_matches_distributed(spark, monkeypatch):
-    """The r10 driver peel (below KCORE_DRIVER_FALLBACK_EDGES) must be
-    row-identical to the distributed loop it replaces at small scale."""
-    import real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.plans.dedup as dd
+    """The r10 driver peel (up to connected_components'
+    DRIVER_FALLBACK_EDGES) must be row-identical to the distributed
+    loop it replaces at small scale."""
+    import real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.operators.connected_components as cc
 
     fast = {r["doc_id"]: r["core_deg"] for r in
             kcore_decomposition(spark, SF).collect()}
-    monkeypatch.setattr(dd, "KCORE_DRIVER_FALLBACK_EDGES", -1)
+    monkeypatch.setattr(cc, "DRIVER_FALLBACK_EDGES", -1)
     dist = {r["doc_id"]: r["core_deg"] for r in
             kcore_decomposition(spark, SF).collect()}
     assert fast == dist and fast

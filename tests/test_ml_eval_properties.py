@@ -8,12 +8,9 @@ from __future__ import annotations
 
 from fractions import Fraction
 
+from conftest import cleared_welch_rule
 from hypothesis import given, settings
 from hypothesis import strategies as st
-
-from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.streaming.ab_monitor import (
-    decide,
-)
 
 pairs = st.lists(
     st.tuples(st.integers(-50, 50), st.booleans()), min_size=2, max_size=120
@@ -105,4 +102,4 @@ def test_cleared_welch_rule_equals_fraction_comparison(ctrl, trt):
     vt = Fraction(q_t * n_t - s_t * s_t, n_t * (n_t - 1))
     vc = Fraction(q_c * n_c - s_c * s_c, n_c * (n_c - 1))
     rhs = 4 * (vt / n_t + vc / n_c)
-    assert decide(n_c, s_c, q_c, n_t, s_t, q_t) == (lhs > rhs)
+    assert cleared_welch_rule(n_c, s_c, q_c, n_t, s_t, q_t) == (lhs > rhs)

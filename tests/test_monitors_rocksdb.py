@@ -1,24 +1,14 @@
-"""RocksDB state-store parity for the late-r7 stateful monitors
-(CUSUM drift, sequential A/B, ordered funnel): the same chunked replay
-must produce identical output under the default (HDFS-backed) and
-RocksDB providers — array-free but mixed-type state rows either
-round-trip the provider encoding exactly or fail here, not in
-production."""
+"""RocksDB state-store parity for the stateful crowd monitors (zone
+loitering, origin-destination flows): the same chunked replay must
+produce identical output under the default (HDFS-backed) and RocksDB
+providers — array-free but mixed-type state rows either round-trip
+the provider encoding exactly or fail here, not in production."""
 
 from __future__ import annotations
 
 import pytest
 from conftest import rocksdb_state_store
 
-from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.streaming.ab_monitor import (
-    streaming_ab_monitor,
-)
-from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.streaming.cusum_monitor import (
-    streaming_cusum_monitor,
-)
-from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.streaming.funnel_monitor import (
-    streaming_funnel_monitor,
-)
 from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.streaming.loiter_alert import (
     streaming_loiter_alerts,
 )
@@ -31,20 +21,6 @@ from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.str
 )
 
 _OPS = {
-    "cusum": (
-        streaming_cusum_monitor,
-        lambda r: (r.event_type, r.hour_start_ms, r.cnt, r.s_pos, r.s_neg,
-                   r.alarm_up, r.alarm_down),
-    ),
-    "ab": (
-        streaming_ab_monitor,
-        lambda r: (r.event_type, r.rows_seen, r.n_c, r.n_t, r.effect_e6,
-                   r.significant),
-    ),
-    "funnel": (
-        streaming_funnel_monitor,
-        lambda r: (r.user_id, r.stage_ord, r.stage, r.ts_us),
-    ),
     "loiter": (
         streaming_loiter_alerts,
         lambda r: (r.user_id, r.zone_x, r.zone_y, r.run_start_us,

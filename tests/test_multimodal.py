@@ -256,44 +256,3 @@ def test_bitwise_mask_apply_cv2_semantics():
     # inside the fire HSV band
     overlay = fire_mask_overlay(frame)
     assert overlay.shape == frame.shape and overlay.dtype == np.uint8
-
-
-def test_read_image_dir_binaryfile_pipeline(spark, tmp_path):
-    """Real-file ingestion: a directory of PNG/GIF files through the
-    binaryFile source feeds the standard operators unchanged — decoded
-    dimensions are real (not the 8x8 stub), the glob filter prunes at
-    the listing, doc_ids are stable across reads."""
-    from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.operators.gifcodec import (
-        encode_gif,
-    )
-    from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.operators.imagecodec import (
-        encode_png,
-    )
-    from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.operators.multimodal import (
-        decode_image,
-        read_image_dir,
-        scan_fire_pixels,
-    )
-
-    d = tmp_path / "imgs"
-    d.mkdir()
-    flame = np.zeros((20, 20, 3), dtype=np.uint8)
-    flame[5:15, 5:15] = (0, 200, 255)
-    (d / "a.png").write_bytes(encode_png(flame))
-    (d / "b.gif").write_bytes(encode_gif(flame))
-    (d / "notes.txt").write_bytes(b"not an image")
-
-    df = read_image_dir(spark, str(d), glob="*.{png,gif}")
-    rows = df.collect()
-    assert len(rows) == 2  # txt pruned at the listing
-    assert {r.payload_uri.rsplit("/", 1)[-1] for r in rows} == {"a.png", "b.gif"}
-    for r in rows:
-        assert decode_image(bytes(r.payload)).shape == (20, 20, 3)
-
-    fire = df.mapInPandas(
-        scan_fire_pixels, schema="doc_id long, fire_pixels long"
-    ).collect()
-    assert all(r.fire_pixels >= 60 for r in fire)  # 10x10 flame patch
-
-    again = {r.payload_uri: r.doc_id for r in read_image_dir(spark, str(d)).collect()}
-    assert all(again[r.payload_uri] == r.doc_id for r in rows)  # stable ids

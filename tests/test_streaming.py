@@ -3,7 +3,6 @@ file-source stream, assert streaming results equal the batch plans."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.operators.edge_trigger import (
@@ -15,41 +14,12 @@ from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.sou
 from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.streaming.runner import (
     run_to_memory,
     stream_events,
-    windowed_trend,
 )
 from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.streaming.stateful import (
     streaming_rising_edges,
 )
 
 THRESHOLD = 150.0
-
-
-def test_windowed_trend_stream_matches_batch(spark, sf_dir):
-    stream = stream_events(spark, sf_dir)
-    q = run_to_memory(windowed_trend(stream), "trend_out", output_mode="complete")
-    try:
-        got = {
-            (r.day, r.event_type): (r.n_events, r.sum_value)
-            for r in spark.sql("SELECT * FROM trend_out").collect()
-        }
-    finally:
-        q.stop()
-    events = load_table(spark, "events", sf_dir)
-    want = {
-        (r.day, r.event_type): (r.n_events, r.sum_value)
-        for r in (
-            events.groupBy(
-                F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"),
-                "event_type",
-            )
-            .agg(
-                F.count("*").alias("n_events"),
-                F.round(F.sum("value"), 2).alias("sum_value"),
-            )
-            .collect()
-        )
-    }
-    assert got == want
 
 
 def test_streaming_edge_trigger_matches_batch_lag(spark, sf_dir):
@@ -97,67 +67,6 @@ def test_streaming_session_window(spark, sf_dir):
     for r in rows:
         stream_sessions[r.user_id] = stream_sessions.get(r.user_id, 0) + 1
     assert {r.user_id: r["count"] for r in batch_sessions.collect()} == stream_sessions
-
-
-def test_streaming_session_windows_match_batch(spark, sf_dir):
-    """Native merging session windows: sessions split across replay
-    micro-batches must merge in the state store and equal the batch
-    session_window_stats answer (chunked replay guarantees genuinely
-    cross-batch sessions)."""
-    from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.plans.relational import (
-        session_window_stats,
-    )
-    from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.streaming.runner import (
-        streaming_session_stats,
-    )
-
-    stream = stream_events(spark, sf_dir)
-    q = run_to_memory(
-        streaming_session_stats(stream), "sessions_out", output_mode="complete"
-    )
-    try:
-        got = {
-            (r.user_id, r.session_start): (r.n_events, r.sum_value)
-            for r in spark.sql("SELECT * FROM sessions_out").collect()
-        }
-    finally:
-        q.stop()
-    want = {
-        (r.user_id, r.session_start): (r.n_events, r.sum_value)
-        for r in session_window_stats(spark, sf_dir).collect()
-    }
-    assert got == want
-
-
-def test_stream_static_enrichment_matches_batch(spark, sf_dir):
-    """Stream-static join: streaming events enriched with the static
-    customer dimension equal the batch join; the static side broadcasts
-    so the stream side never shuffles."""
-    from real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark.streaming.runner import (
-        enrich_stream_with_dim,
-    )
-
-    dim = (
-        load_table(spark, "customer", sf_dir)
-        .selectExpr("c_custkey AS user_id", "c_mktsegment AS segment")
-    )
-    stream = stream_events(spark, sf_dir).select("event_id", "user_id")
-    q = run_to_memory(enrich_stream_with_dim(stream, dim), "enriched_out")
-    try:
-        got = {
-            r.event_id: (r.user_id, r.segment)
-            for r in spark.sql("SELECT * FROM enriched_out").collect()
-        }
-    finally:
-        q.stop()
-    events = load_table(spark, "events", sf_dir).select("event_id", "user_id")
-    want = {
-        r.event_id: (r.user_id, r.segment)
-        for r in events.join(dim, "user_id", "left")
-        .select("event_id", "user_id", "segment")
-        .collect()
-    }
-    assert got == want
 
 
 def test_available_now_trigger_drains_and_stops(spark, sf_dir):

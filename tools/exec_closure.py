@@ -46,8 +46,6 @@ ALLOWLIST = {
         "preprocess_blob", "bgr_to_hsv", "_gaussian_kernel", "gaussian_blur",
         "fire_pixel_count", "bitwise_mask_apply", "fire_mask_overlay",
         "resize_image", "scan_fire_pixels", "fire_pixel_scan")},
-    "operators/multimodal.py::read_image_dir": "tests/test_multimodal.py::"
-        "test_read_image_dir_binaryfile_pipeline: files through the fire path",
     **{f"operators/connected_components.py::{f}": "distributed side of the "
        "size gate: tests/test_connected_components.py"
        for f in ("_large_star", "_small_star", "_edge_partitions", "_min_neighbor")},
@@ -63,12 +61,10 @@ ALLOWLIST = {
     "sources/sqlite_source.py": "S4: the Django SQLite user store",
     "streaming/sinks.py": "S6: alarm sink, once per crowding episode",
     "sources/httpform.py": "S8: the login form source",
-    "streaming/stateful.py": "W2: rising-edge alarm trigger and its S6 episode "
-        "twin: tests/test_streaming.py, tests/test_streaming_episodes.py",
+    "streaming/stateful.py": "W2: rising-edge alarm trigger: tests/test_streaming.py",
     "streaming/runner.py": _STREAM + "test_streaming.py, test_stream_stream_join.py",
     **{f"streaming/{m}.py": f"{_STREAM}test_{m}.py" for m in (
-        "ab_monitor", "cusum_monitor", "funnel_monitor", "hot_cell_alert",
-        "loiter_alert", "od_tracker")},
+        "hot_cell_alert", "loiter_alert", "od_tracker")},
 }
 
 HOOK = '''\
