@@ -141,16 +141,7 @@ def click_purchase_pairs(
     anti-pattern this module exists to avoid. Works identically on
     batch DataFrames (no code change), which the parity test exploits.
     """
-    p = purchases.withWatermark("p_ts", watermark)
-    c = clicks.withWatermark("c_ts", watermark)
-    cond = (
-        (p["user_id"] == c["c_user_id"])
-        & (c["c_ts"] >= p["p_ts"] - F.expr(f"INTERVAL {window_s} SECONDS"))
-        & (c["c_ts"] <= p["p_ts"] + F.expr(f"INTERVAL {window_s} SECONDS"))
-    )
-    return p.join(c, cond).select(
-        "user_id", "purchase_id", "click_id", "p_ts", "c_ts"
-    )
+    return _click_purchase_join(purchases, clicks, window_s, watermark, "inner")
 
 
 def click_purchase_pairs_outer(
@@ -171,6 +162,12 @@ def click_purchase_pairs_outer(
     unbounded outer stream-stream join outright), because the null
     side can only be decided when state provably expires.
     """
+    return _click_purchase_join(purchases, clicks, window_s, watermark, "left_outer")
+
+
+def _click_purchase_join(
+    purchases: DataFrame, clicks: DataFrame, window_s: int, watermark: str, how: str
+) -> DataFrame:
     p = purchases.withWatermark("p_ts", watermark)
     c = clicks.withWatermark("c_ts", watermark)
     cond = (
@@ -178,6 +175,6 @@ def click_purchase_pairs_outer(
         & (c["c_ts"] >= p["p_ts"] - F.expr(f"INTERVAL {window_s} SECONDS"))
         & (c["c_ts"] <= p["p_ts"] + F.expr(f"INTERVAL {window_s} SECONDS"))
     )
-    return p.join(c, cond, "left_outer").select(
+    return p.join(c, cond, how).select(
         "user_id", "purchase_id", "click_id", "p_ts", "c_ts"
     )

@@ -7,13 +7,22 @@ parent packages each import runs. A module outside the closure fails
 the test unless ``ALLOWLIST`` names it with a reason; an entry that is
 reached, or that names no module, fails it too.
 
-A new module is wired from a root or gets an allowlist entry here.
+A new module is wired from a root, or gets an allowlist entry in
+``tools/exec_closure.py::REFERENCE_ROWS`` if it is a reference row.
 """
 
 from __future__ import annotations
 
 import ast
+import os
+import sys
 from pathlib import Path
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+# module -> the SURVEY.md §2.1 reference row it is the engine's only
+# implementation of; tools/exec_closure.py allowlists the same modules
+from tools.exec_closure import REFERENCE_ROWS as ALLOWLIST  # noqa: E402
 
 PACKAGE = "real_time_ai_enhanced_crowd_surveillance_with__big_data_analytics_spark"
 PKG_DIR = Path(__file__).resolve().parents[1] / PACKAGE
@@ -27,16 +36,6 @@ ROOTS = {
     "sources.tables": "loaded by name in perfbench/run.py",
     "streaming.crowd_density": "loaded by name in perfbench/run.py",
     "streaming.pipeline": "loaded by name in perfbench/run.py",
-}
-
-# module -> the SURVEY.md §2.1 reference row it is the engine's only
-# implementation of; its caller is a deployment, not the registry
-ALLOWLIST = {
-    "sources.framefeed": "S1: webcam frame source",
-    "operators.inference": "S2: YOLO/CLIP models loaded once per executor",
-    "sources.sqlite_source": "S4: the Django SQLite user store",
-    "streaming.sinks": "S6: alarm sink, once per crowding episode",
-    "sources.httpform": "S8: the login form source",
 }
 
 

@@ -1,15 +1,14 @@
-"""Materialize an amplified test dataset for the r10 scaling probe
-(VERDICT r9 #9: sf0.1's 0.2-5 s queries are overhead-bound, so 8-vs-32
-core ratios read ≈1 for everything; a real parallelism datapoint needs
-enough work per query to swamp fixed costs).
+"""Materialize an amplified copy of the sf0.1 test dataset: the
+registry's inputs at a size where per-query fixed costs no longer hide
+how a query scales with input and cores.
 
 Amplifies documents / embeddings / events / customer AMP× with shifted
-ids and jittered text (replicas are near-dups, not exact dups — the
-hard case for banding, same scheme as tools/scale_probe.py) and copies
-the remaining TPC-H tables unchanged. Output is written as multi-file
-parquet so scans parallelize the way any real corpus would (the sf0.1
-files are single-row-group: every scan is one task no matter the core
-count — that alone invalidates sf0.1 scaling ratios).
+ids and jittered text (replicas are near-dups, not exact dups: the
+hard case for banding) and copies the remaining TPC-H tables unchanged.
+Output is multi-file parquet so scans parallelize the way any real
+corpus would (the sf0.1 files are single-row-group: every scan is one
+task no matter the core count). Profile the result like any other
+dataset directory with ``tools/layer_profile.py``.
 
 Usage::
 
